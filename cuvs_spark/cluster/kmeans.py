@@ -102,6 +102,38 @@ def coarse_sorted_sql(vec_sql: str, centroids, *,
             f"c -> named_struct('d', {dist}, 'l', c.l, 'cv', c.cv)))")
 
 
+# queries per block of the driver-side probe kernel: bounds its
+# (block × n_lists) float64 distance tile
+_PROBE_BLOCK = 4096
+
+
+def coarse_probes(Q: np.ndarray, centroids, n_probes: int) -> np.ndarray:
+    """Driver-side coarse probes → ``(n_queries, min(n_probes,
+    n_lists))`` list ids, best first: the NumPy twin of
+    ``slice(coarse_sorted_sql(vec, centroids), 1, n_probes)``.
+
+    Bit-identical to the SQL rows, ties included, by construction:
+    the centroids narrow to float32 exactly as the literal's
+    ``CAST(… AS FLOAT)`` does; each distance folds ``(x − y)²`` in
+    float64 left to right, one dimension at a time, as
+    ``aggregate(zip_with(…))`` does (a GEMM would reassociate the sum);
+    and a stable argsort keeps equal distances in label order, which
+    is ``array_sort``'s ``(d, l)`` order (NaN sorts last in both)."""
+    Q = np.asarray(Q, dtype=np.float64)
+    C = np.asarray(centroids, dtype=np.float32).astype(np.float64)
+    p = min(int(n_probes), len(C))
+    out = np.empty((len(Q), p), dtype=np.int64)
+    for s in range(0, len(Q), _PROBE_BLOCK):
+        Qb = Q[s:s + _PROBE_BLOCK]
+        D = np.zeros((len(Qb), len(C)))
+        for j in range(C.shape[1]):
+            t = Qb[:, j, None] - C[None, :, j]
+            t *= t
+            D += t
+        out[s:s + len(Qb)] = np.argsort(D, axis=1, kind="stable")[:, :p]
+    return out
+
+
 def assign(df: DataFrame, centroids, *, id_col: str = "id",
            vec_col: str = "vec", metric: str = "sqeuclidean",
            dist_col: str | None = None, method: str = "expr",

@@ -2799,8 +2799,9 @@ register("ivf_flat_search_blas", _ivf_blas,
 
 
 def _ivf_broadcast(spark, sf_dir):
-    """Broadcast-queries fine stage (inverted file never shuffles) —
-    hash-equal to the expr/cogroup plans on ids+rank."""
+    """``method="broadcast"``, an alias of the one-pass ``blas`` search
+    (inverted file never shuffles) — hash-equal to the expr plan on
+    ids+rank."""
     from cuvs_spark.operators.ivf_flat import ivf_flat_build, ivf_flat_search
     d = emb_dataset(spark, sf_dir)
     idx = ivf_flat_build(d, _IVF_LISTS,

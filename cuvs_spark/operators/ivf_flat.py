@@ -13,14 +13,19 @@ Spark design (SURVEY.md §2.5): the index IS a partitioning.
   ``n_lists`` centroids; the assignment table ``(id, list_id, vec)`` is
   the inverted file. Persisted ``partitionBy(list_id)`` so searches
   prune at the *file listing* level.
-* **search** — coarse stage: queries × broadcast centroids → top
-  ``n_probes`` lists per query (tiny). Fine stage: the probe set is
-  broadcast against the assignment table, so only rows whose
-  ``list_id`` is probed are scanned — Spark's dynamic partition
-  pruning / broadcast-hash-join does exactly what the reference's
-  ``select_clusters`` + per-list scan does, and the dataset side never
-  shuffles. At 1000 executors the scan reads
-  ``n_probes / n_lists`` of the data — same asymptotic win as the GPU.
+* **search** — the reference's ``select_clusters`` + per-list scan.
+  ``method="blas"`` (alias ``"broadcast"``) is one pass: the query
+  batch (small by contract) comes to the driver, a NumPy kernel picks
+  each query's ``n_probes`` lists (``kmeans.coarse_probes`` — the same
+  rows and ties as the SQL fold), ``{list_id: (qids, Q)}`` is
+  broadcast, unprobed lists are filtered out before the scan, and each
+  partition of the inverted file GEMM-scores its own lists and keeps a
+  local top-k; the only shuffle is the ``n_parts × q × k`` merge.
+  ``method="expr"`` (oracle-exact) runs the coarse stage as a map-only
+  SQL fold and broadcast-joins the probe set against the inverted
+  file, so the dataset side never shuffles there either. At 1000
+  executors the scan reads ``n_probes / n_lists`` of the data — same
+  asymptotic win as the GPU.
 * **extend** — append + assign to nearest existing center
   (``ivf_flat.pyx:467``): a union plus one broadcast join.
 """
@@ -118,28 +123,35 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
     """Partition-pruned ANN search → ``(qid, nid, distance, rank)``.
 
     ``method="expr"`` scores the probed rows with the JVM distance
-    expression (oracle-exact). ``method="blas"`` runs the fine stage as
-    a *cogroup* on list_id — each list's vectors meet exactly the
-    queries probing it in one Arrow batch, scored by a NumPy GEMM tile
-    and reduced to a local top-k before the merge. At the 200k-row
-    probe this is ~10× faster per scanned pair; it is the 100 TB fine
-    stage (``ivfflat_interleaved_scan`` analog). ``method="broadcast"``
-    goes further when the inverted file dwarfs the query batch: probing
-    queries are broadcast and each lists partition scores in place —
-    the dataset never shuffles (2.6× the cogroup at the 200k probe)."""
+    expression (oracle-exact). ``method="blas"`` is the throughput
+    path (``ivfflat_interleaved_scan`` analog): the query batch comes
+    to the driver, :func:`~cuvs_spark.cluster.kmeans.coarse_probes`
+    picks each query's lists, and one map pass over the inverted file
+    GEMM-scores every probed list against exactly the queries probing
+    it, keeping a local top-k before the single merge shuffle — see
+    :func:`_probe_scan`. ``method="broadcast"`` is an alias of
+    ``"blas"``."""
     metric = metric or index.metric
-    spark = queries.sparkSession
     # bitset-filter analog (filters.pyx works across index types): a
     # boolean Column over the inverted file (id / list_id / vec),
-    # applied BEFORE any distance math, shared by all three methods —
+    # applied BEFORE any distance math, shared by every method —
     # Catalyst pushes id-predicates into the (partition-pruned) scan
     lists = index.lists if prefilter is None else index.lists.filter(prefilter)
+    q = queries.select(F.col(qid_col).cast("long").alias("qid"),
+                       F.col(qvec_col).alias("_qv"))
+    if method in ("blas", "broadcast"):
+        from cuvs_spark.operators.brute_force import _pairwise_np
+        qids, Q = _query_matrix(q, index.centroids.shape[1], "ivf_flat_search")
+
+        def score(_, lid, X, Q):
+            return _pairwise_np(Q, X.astype(np.float64), metric)
+
+        return _probe_scan(lists, "vec", index.centroids, qids, Q, n_probes,
+                           k, is_min_close(metric), score)
     from cuvs_spark.plans.layout import spread_narrow
     # r14: the coarse literal fold is per-QUERY heavy compute — spread a
     # narrow query batch over the cores (no-op when already split)
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
+    q = spread_narrow(q, "qid")
     # coarse: top-n_probes lists per query (always by the *coarse* metric
     # of the quantizer — sqeuclidean — matching ivf_flat_search.cuh).
     # r14: map-only literal slice of the best-first sorted centroid fold
@@ -149,17 +161,11 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
     cs = coarse_sorted_sql("_qv", index.centroids)
     # r15: the query vector rides along through the probe explode (the
     # probe set is a pure function of q, so re-joining q on qid only
-    # re-attached a column this projection already holds) — the
-    # probes ⋈ q join and its exchange/broadcast disappear from every
-    # fine stage; rows and values are identical by construction.
+    # re-attached a column this projection already holds).
     probes = (q.select(
         "qid", "_qv",
         F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
         .select("qid", F.col("_s.l").alias("list_id"), "_qv"))
-    if method == "blas":
-        return _fine_blas(lists, q, probes, k, metric)
-    if method == "broadcast":
-        return _fine_broadcast(lists, q, probes, k, metric)
     # fine: broadcast the (qid, list_id, qv) probe set against the
     # inverted file — only probed lists are scanned, dataset side never
     # shuffles.
@@ -171,105 +177,84 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
                     select_min=is_min_close(metric), tie_cols=["nid"])
 
 
-def _fine_blas(lists: DataFrame, q: DataFrame, probes: DataFrame,
-               k: int, metric: str, *, dedupe: bool = False) -> DataFrame:
-    """Cogrouped fine stage: per list_id, (list vectors) × (probing
-    queries) → GEMM tile → local top-k; global knn_merge_parts.
-    ``lists`` is any ``(list_id, id, vec)`` relation; ``dedupe=True``
-    collapses a vector probed through several lists (ScaNN's spilled
-    assignment) to its single exact distance before the merge."""
+def _query_matrix(q: DataFrame, dim: int,
+                  op: str) -> tuple[np.ndarray, np.ndarray]:
+    """A ``(qid, _qv)`` query batch on the driver → ``(qids, Q)``, Q in
+    float64 (exact for float32 and float64 inputs). Queries are small
+    by contract, like the brute-force query matrix. A null vector
+    probes nothing, as on the SQL path; a length other than the index
+    dim raises here, naming both, before any job over the index."""
+    pdf = q.filter(F.col("_qv").isNotNull()).toPandas()
+    vecs = pdf["_qv"].to_numpy()
+    bad = next((len(v) for v in vecs if len(v) != dim), None)
+    if bad is not None:
+        raise ValueError(f"{op}: query vectors have {bad} dims but the "
+                         f"index has {dim}")
+    Q = (np.vstack(vecs).astype(np.float64) if len(vecs)
+         else np.empty((0, dim)))
+    return pdf["qid"].to_numpy(np.int64), Q
+
+
+def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
+                qids: np.ndarray, Q: np.ndarray, n_probes: int, k: int,
+                minimize: bool, score, consts=None) -> DataFrame:
+    """One pass over an IVF table ``(id, list_id, <payload>)`` →
+    ``(qid, nid, distance, rank)`` — the reference's
+    ``select_clusters`` + per-list scan (``ivf_flat_search.cuh:41``).
+
+    The driver computes every query's probes (:func:`coarse_probes`,
+    the same rows as the SQL fold), groups them into ``{list_id:
+    (qids, Q)}`` and broadcasts that with ``consts``. Each partition
+    of the table then scores its own probed lists in place —
+    ``score(consts, list_id, P, Q)`` returns the ``(len(Q), len(P))``
+    distance tile for the list's stacked payload rows ``P`` — and
+    emits each list's local top-k (the merge's partial
+    ``WindowGroupLimit`` then keeps k rows per query per partition).
+    Unprobed lists are filtered out before the scan (file-level pruning
+    on a ``partitionBy(list_id)`` table); the table never shuffles, and
+    the only exchange is the ``n_parts × q × k`` ``knn_merge_parts``."""
     import pandas as pd
 
-    from cuvs_spark.operators.brute_force import _pairwise_np
+    from cuvs_spark.cluster.kmeans import coarse_probes
     from cuvs_spark.operators.select_k import knn_merge_parts
 
-    minimize = is_min_close(metric)
-    # r15: probes that already carry the query vector skip the join-back
-    probing_q = (probes.select("list_id", "qid", "_qv")
-                 if "_qv" in probes.columns
-                 else probes.join(q, "qid").select("list_id", "qid", "_qv"))
+    probes = coarse_probes(Q, centroids, n_probes)
+    flat = probes.ravel()
+    order = np.argsort(flat, kind="stable")
+    rows_of = np.repeat(np.arange(len(Q)), probes.shape[1])[order]
+    lids, starts = np.unique(flat[order], return_index=True)
+    by_list = {int(lid): (qids[r], Q[r])
+               for lid, r in zip(lids, np.split(rows_of, starts[1:]))}
+    bc = table.sparkSession.sparkContext.broadcast((by_list, consts))
 
-    def score(key, rows: pd.DataFrame, queries_pdf: pd.DataFrame):
-        if rows.empty or queries_pdf.empty:
-            return pd.DataFrame(columns=["qid", "nid", "distance"])
-        import numpy as np
-        X = np.vstack(rows["vec"].to_numpy()).astype(np.float64)
-        ids = rows["id"].to_numpy().astype(np.int64)
-        Q = np.vstack(queries_pdf["_qv"].to_numpy()).astype(np.float64)
-        qids = queries_pdf["qid"].to_numpy().astype(np.int64)
-        D = _pairwise_np(Q, X, metric)
-        kk = min(k, D.shape[1])
-        part = (np.argpartition(D if minimize else -D, kk - 1, axis=1)
-                [:, :kk])
-        return pd.DataFrame({
-            "qid": np.repeat(qids, kk),
-            "nid": np.take_along_axis(
-                np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-            "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-    local = (lists.groupBy("list_id")
-             .cogroup(probing_q.groupBy("list_id"))
-             .applyInPandas(score, schema="qid long, nid long, distance double"))
-    if dedupe:
-        local = (local.groupBy("qid", "nid")
-                 .agg(F.min("distance").alias("distance")))
-    return knn_merge_parts(local, k, select_min=minimize)
-
-
-def _fine_broadcast(lists: DataFrame, q: DataFrame, probes: DataFrame,
-                    k: int, metric: str) -> DataFrame:
-    """Broadcast-queries fine stage: the inverted file NEVER shuffles.
-    The probing (qid, vector) sets are grouped per list, collected
-    (small-side-by-contract, like the brute-force query matrix) and
-    broadcast; each *lists partition* GEMM-scores its own lists in
-    place and emits a local top-k — the only exchange is the
-    ``n_parts × q × k`` merge. Prefer over the cogroup when the
-    inverted file dwarfs the query batch."""
-    import pandas as pd
-
-    from cuvs_spark.operators.brute_force import _pairwise_np
-    from cuvs_spark.operators.select_k import knn_merge_parts
-
-    minimize = is_min_close(metric)
-    spark = q.sparkSession
-    qp = (probes if "_qv" in probes.columns
-          else probes.join(q, "qid"))
-    qp_rows = (qp.groupBy("list_id")
-               .agg(F.collect_list(F.struct("qid", "_qv")).alias("qs"))
-               .collect())
-    by_list = {}
-    for r in qp_rows:
-        import numpy as np
-        qids = np.array([x["qid"] for x in r["qs"]], dtype=np.int64)
-        Q = np.array([x["_qv"] for x in r["qs"]], dtype=np.float64)
-        by_list[int(r["list_id"])] = (qids, Q)
-    bc = spark.sparkContext.broadcast(by_list)
-
-    def score_parts(batches):
-        import numpy as np
+    def scan(batches):
+        by_list, consts = bc.value
         for pdf in batches:
+            if pdf.empty:
+                continue
+            P = np.vstack(pdf[payload].to_numpy())
+            ids_all = pdf["id"].to_numpy(np.int64)
             outs = []
-            for lid, rows in pdf.groupby("list_id"):
-                hit = bc.value.get(int(lid))
+            for lid, pos in pdf.groupby("list_id", sort=False).indices.items():
+                hit = by_list.get(int(lid))
                 if hit is None:
                     continue
-                qids, Q = hit
-                X = np.vstack(rows["vec"].to_numpy()).astype(np.float64)
-                ids = rows["id"].to_numpy().astype(np.int64)
-                D = _pairwise_np(Q, X, metric)
+                bq, BQ = hit
+                D = score(consts, int(lid), P[pos], BQ)
                 kk = min(k, D.shape[1])
-                part = (np.argpartition(D if minimize else -D, kk - 1,
-                                        axis=1)[:, :kk])
+                part = np.argpartition(D if minimize else -D, kk - 1,
+                                       axis=1)[:, :kk]
                 outs.append(pd.DataFrame({
-                    "qid": np.repeat(qids, kk),
-                    "nid": np.take_along_axis(
-                        np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
+                    "qid": np.repeat(bq, kk),
+                    "nid": ids_all[pos][part].ravel(),
                     "distance": np.take_along_axis(D, part, axis=1).ravel()}))
             if outs:
                 yield pd.concat(outs)
 
-    local = lists.select("list_id", "id", "vec").mapInPandas(
-        score_parts, "qid long, nid long, distance double")
+    if len(by_list) < len(centroids):
+        table = table.filter(F.col("list_id").isin(list(by_list)))
+    local = table.select("list_id", "id", payload).mapInPandas(
+        scan, "qid long, nid long, distance double")
     return knn_merge_parts(local, k, select_min=minimize)
 
 

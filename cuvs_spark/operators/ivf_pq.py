@@ -21,7 +21,12 @@ Spark design:
   (sub, code); summing subdists per (qid, id) IS the LUT lookup
   accumulation, with map-side combine. The per-(qid,id) partials are
   folded in subspace order (sorted-array fold) so results are
-  deterministic and oracle-exact.
+  deterministic and oracle-exact. ``method="blas"`` (alias
+  ``"broadcast"``) is the single-pass throughput path shared with
+  IVF-Flat: driver-side probes, the query batch broadcast per list,
+  each codes partition LUT-scores its own lists in NumPy; the codes
+  table never shuffles and the codebook array is collected once per
+  index.
 * **SQ search** — decode is a closed-form expression
   (``center + lo + (code+128)·step``), distance runs on the decoded
   array; everything stays in whole-stage codegen.
@@ -38,6 +43,7 @@ Spark design:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -146,6 +152,18 @@ class IVFPQIndex:
     metric: str = "sqeuclidean"
     encode: str = "raw"            # "raw" (build_precomputed) | "residual"
     rotation: np.ndarray | None = None   # (dim, dim) orthogonal, or None
+
+    @cached_property
+    def codebook_array(self) -> np.ndarray:
+        """``(pq_dim, n_codes, sub_width)`` float64 codebook, collected
+        from ``codebook_df`` once per index: repeat NumPy searches run
+        no codebook job. Same float32-narrowed values the table holds."""
+        rows = self.codebook_df.collect()
+        CB = np.zeros((self.pq_dim, max(r["code"] for r in rows) + 1,
+                       len(rows[0]["centroid"])))
+        for r in rows:
+            CB[r["sub"], r["code"]] = r["centroid"]
+        return CB
 
 
 # residual expression shared by build + search (reference
@@ -393,36 +411,50 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
     folded in subspace order → deterministic).
 
     ``method="blas"`` is the throughput path (the reference's
-    ``compute_similarity`` kernel shape): cogroup the codes table with
-    the probing queries per list, build each query's LUT once in NumPy,
-    score the whole list's code matrix by fancy-indexed LUT gather, and
-    keep a local top-k before the merge — no per-(row, subspace)
-    explosion, no LUT join relation.
-
-    ``method="broadcast"`` is the codes-dominant scale path: the
-    probing (qid, list, vector) set is broadcast (small-side-by-
-    contract, like the brute-force query matrix) and each codes
-    partition scores its own lists in place — the multi-TB codes table
-    never shuffles; only the ``n_parts × q × k`` local top-k merges.
-    Prefer it when codes ≫ queries; the cogroup wins when both sides
-    are small (its two shuffles are cheaper than the collect+broadcast
-    round-trip)."""
+    ``compute_similarity`` kernel shape): driver-side probes, then one
+    map pass over the codes table (``ivf_flat._probe_scan``) — each
+    partition builds each probing query's LUT once in NumPy, scores its
+    own lists' code matrices by fancy-indexed LUT gather and keeps a
+    local top-k before the merge. The codes table never shuffles; no
+    per-(row, subspace) explosion, no LUT join relation, and the
+    codebook comes from :attr:`IVFPQIndex.codebook_array`.
+    ``method="broadcast"`` is an alias of ``"blas"``."""
     from cuvs_spark.functions.distance import is_min_close
     metric = _pq_metric(index.metric)
     minimize = is_min_close(metric)
     ip = _pq_lut_kind(metric) == "inner_product"
-    spark = queries.sparkSession
     # bitset-filter analog (filters.pyx applies to every index type):
     # boolean Column over the codes table, applied before scoring
     codes_t = (index.codes if prefilter is None
                else index.codes.filter(prefilter))
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
+    q = queries.select(F.col(qid_col).cast("long").alias("qid"),
+                       F.col(qvec_col).alias("_qv"))
     if metric == "cosine":
         from cuvs_spark.functions.vector import l2_normalize
         q = q.withColumn("_qv", l2_normalize("_qv"))
+    residual = index.encode == "residual"
+    if method in ("blas", "broadcast"):
+        from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
+        qids, Q = _query_matrix(q, index.centroids.shape[1], "ivf_pq_search")
+        CB = index.codebook_array
+
+        def score(consts, lid, C, Q):
+            CB, cent, rot = consts
+            # L2 residual: the query shifts by the list center (then the
+            # build-time rotation); IP residual: the per-list q·c
+            # constant instead. Floor-width slicing inside keeps parity
+            # with _subvecs when dim % pq_dim != 0.
+            return _pq_lut_score(Q, C.astype(np.int64), CB, CB.shape[0],
+                                 CB.shape[2],
+                                 cent[lid] if cent is not None else None,
+                                 rot, metric)
+
+        return _probe_scan(codes_t, "codes", index.centroids, qids, Q,
+                           n_probes, k, minimize, score,
+                           (CB, index.centroids if residual else None,
+                            index.rotation))
+    from cuvs_spark.plans.layout import spread_narrow
+    q = spread_narrow(q, "qid")
     # r14: coarse probes as a map-only literal slice (guide §2.4) —
     # same rows/ties as the old broadcast-join + window; the probed
     # centroid vector rides along so the qc/qres stages below need no
@@ -436,111 +468,6 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
         .select("qid", F.col("_s.l").alias("list_id"),
                 F.col("_s.cv").alias("_cent"), "_qv"))
     probes = probes_cv.select("qid", "list_id")
-    residual = index.encode == "residual"
-    if method == "broadcast":
-        # The 100 TB shape: the codes table NEVER shuffles. Queries are
-        # small-side-by-contract (like the brute-force BLAS query
-        # matrix): probe assignment runs JVM-side, then the probing
-        # (qid, list_id, query-vector) set is collected + broadcast and
-        # each codes partition LUT-scores its own lists and emits a
-        # local top-k — the only exchange is the n_parts × q × k merge.
-        import pandas as pd
-
-        from cuvs_spark.operators.select_k import knn_merge_parts
-        cb_rows = index.codebook_df.collect()
-        S = index.pq_dim
-        n_codes = max(r["code"] for r in cb_rows) + 1
-        w = len(cb_rows[0]["centroid"])
-        CB = np.zeros((S, n_codes, w))
-        for r in cb_rows:
-            CB[r["sub"], r["code"]] = r["centroid"]
-        cent_np = index.centroids if residual else None
-        rot = index.rotation
-        qp_rows = (probes_cv
-                   .groupBy("list_id")
-                   .agg(F.collect_list(F.struct("qid", "_qv")).alias("qs"))
-                   .collect())
-        by_list = {}
-        for r in qp_rows:
-            qids = np.array([x["qid"] for x in r["qs"]], dtype=np.int64)
-            Q = np.array([x["_qv"] for x in r["qs"]], dtype=np.float64)
-            by_list[int(r["list_id"])] = (qids, Q)
-        bc = spark.sparkContext.broadcast(by_list)
-
-        def score_parts(batches):
-            for pdf in batches:
-                outs = []
-                for lid, rows in pdf.groupby("list_id"):
-                    hit = bc.value.get(int(lid))
-                    if hit is None:
-                        continue
-                    qids, Q = hit
-                    C = np.vstack(rows["codes"].to_numpy()).astype(np.int64)
-                    ids = rows["id"].to_numpy(np.int64)
-                    D = _pq_lut_score(
-                        Q, C, CB, S, w,
-                        cent_np[int(lid)] if cent_np is not None else None,
-                        rot, metric)
-                    kk = min(k, D.shape[1])
-                    part = np.argpartition(D if minimize else -D,
-                                           kk - 1, axis=1)[:, :kk]
-                    outs.append(pd.DataFrame({
-                        "qid": np.repeat(qids, kk),
-                        "nid": np.take_along_axis(
-                            np.broadcast_to(ids, D.shape), part,
-                            axis=1).ravel(),
-                        "distance": np.take_along_axis(D, part,
-                                                       axis=1).ravel()}))
-                if outs:
-                    yield pd.concat(outs)
-
-        local = codes_t.select("list_id", "id", "codes").mapInPandas(
-            score_parts, "qid long, nid long, distance double")
-        return knn_merge_parts(local, k, select_min=minimize)
-    if method == "blas":
-        import pandas as pd
-
-        from cuvs_spark.operators.select_k import knn_merge_parts
-        cb_rows = index.codebook_df.collect()
-        S = index.pq_dim
-        n_codes = max(r["code"] for r in cb_rows) + 1
-        w = len(cb_rows[0]["centroid"])
-        CB = np.zeros((S, n_codes, w))
-        for r in cb_rows:
-            CB[r["sub"], r["code"]] = r["centroid"]
-        cent_np = index.centroids if residual else None
-        rot = index.rotation
-        qside = probes_cv.select("list_id", "qid", "_qv")
-
-        def score(key, rows: pd.DataFrame, qp: pd.DataFrame):
-            if rows.empty or qp.empty:
-                return pd.DataFrame(columns=["qid", "nid", "distance"])
-            C = np.vstack(rows["codes"].to_numpy()).astype(np.int64)
-            ids = rows["id"].to_numpy(np.int64)
-            Q = np.vstack(qp["_qv"].to_numpy()).astype(np.float64)
-            qids = qp["qid"].to_numpy(np.int64)
-            # L2 residual: per probed list the query shifts by the list
-            # center (then the build-time rotation); IP residual: the
-            # per-list q·c constant instead. Floor-width slicing inside
-            # keeps parity with _subvecs when dim % S != 0.
-            D = _pq_lut_score(
-                Q, C, CB, S, w,
-                cent_np[int(key[0])] if cent_np is not None else None,
-                rot, metric)
-            kk = min(k, D.shape[1])
-            part = np.argpartition(D if minimize else -D,
-                                   kk - 1, axis=1)[:, :kk]
-            return pd.DataFrame({
-                "qid": np.repeat(qids, kk),
-                "nid": np.take_along_axis(
-                    np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-        local = (codes_t.groupBy("list_id")
-                 .cogroup(qside.groupBy("list_id"))
-                 .applyInPandas(score,
-                                "qid long, nid long, distance double"))
-        return knn_merge_parts(local, k, select_min=minimize)
     pq_dim = index.pq_dim
     # per-subspace LUT term of the DECOMPOSED kind (L2 squared
     # residuals for the euclidean family, subspace dots for the IP

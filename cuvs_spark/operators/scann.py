@@ -283,6 +283,47 @@ def _probes(index: ScannIndex, q: DataFrame, n_probes: int) -> DataFrame:
         .select("qid", F.col("_s.l").cast("long").alias("list_id"), "_qv"))
 
 
+def _fine_blas(lists: DataFrame, probes: DataFrame, k: int,
+               metric: str) -> DataFrame:
+    """Cogrouped fine stage over the spilled lists: per list_id, (list
+    vectors) × (probing queries) → GEMM tile → local top-k; a vector
+    probed through several leaves collapses to its single exact
+    distance before the global knn_merge_parts. ``lists`` is any
+    ``(list_id, id, vec)`` relation, ``probes`` ``(qid, list_id,
+    _qv)``."""
+    import pandas as pd
+
+    from cuvs_spark.operators.brute_force import _pairwise_np
+    from cuvs_spark.operators.select_k import knn_merge_parts
+
+    minimize = is_min_close(metric)
+
+    def score(key, rows: pd.DataFrame, queries_pdf: pd.DataFrame):
+        if rows.empty or queries_pdf.empty:
+            return pd.DataFrame(columns=["qid", "nid", "distance"])
+        X = np.vstack(rows["vec"].to_numpy()).astype(np.float64)
+        ids = rows["id"].to_numpy().astype(np.int64)
+        Q = np.vstack(queries_pdf["_qv"].to_numpy()).astype(np.float64)
+        qids = queries_pdf["qid"].to_numpy().astype(np.int64)
+        D = _pairwise_np(Q, X, metric)
+        kk = min(k, D.shape[1])
+        part = (np.argpartition(D if minimize else -D, kk - 1, axis=1)
+                [:, :kk])
+        return pd.DataFrame({
+            "qid": np.repeat(qids, kk),
+            "nid": np.take_along_axis(
+                np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
+            "distance": np.take_along_axis(D, part, axis=1).ravel()})
+
+    local = (lists.groupBy("list_id")
+             .cogroup(probes.select("list_id", "qid", "_qv")
+                      .groupBy("list_id"))
+             .applyInPandas(score, schema="qid long, nid long, distance double")
+             .groupBy("qid", "nid")
+             .agg(F.min("distance").alias("distance")))
+    return knn_merge_parts(local, k, select_min=minimize)
+
+
 def scann_search(index: ScannIndex, queries: DataFrame, k: int = 10,
                  n_probes: int = 8, *, qid_col: str = "qid",
                  qvec_col: str = "vec", method: str = "reorder",
@@ -303,17 +344,15 @@ def scann_search(index: ScannIndex, queries: DataFrame, k: int = 10,
                       "list_id")
                 .select("qid", "id").distinct())
         if score_method == "blas":
-            # cogrouped GEMM per leaf (the IVF-Flat fine stage over the
-            # spilled lists); a vector probed through both of its leaves
-            # scores identically — dedupe collapses it before the merge
-            from cuvs_spark.operators.ivf_flat import _fine_blas
+            # cogrouped GEMM per leaf over the spilled lists; a vector
+            # probed through both of its leaves scores identically —
+            # _fine_blas collapses it before the merge
             # distinct (id, leaf): a vector whose SOAR leaf equals its
             # primary leaf must not occupy two local top-k slots
             lists = (index.assignments.select("id", "list_id").distinct()
                      .join(index.vectors, "id")
                      .select("list_id", "id", "vec"))
-            return _fine_blas(lists, q, probes, k, index.metric,
-                              dedupe=True)
+            return _fine_blas(lists, probes, k, index.metric)
         fdist = F.expr(distance_sql_spark(index.metric, "_qv", "vec"))
         pairs = (cand.join(index.vectors, "id")
                  .join(F.broadcast(q), "qid")

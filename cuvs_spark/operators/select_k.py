@@ -113,13 +113,24 @@ def select_k(df: DataFrame,
     # r15 (construction latency): one select carries the row_number,
     # the post-filter select emits the final columns — 3 analyzed
     # Datasets instead of 4; the optimized plan (CollapseProject +
-    # column pruning) is identical to the withColumn/drop chain.
+    # column pruning) is identical to the withColumn/drop chain. The
+    # row number takes a name the input does not use, and an input
+    # column named ``rank_col`` is replaced in place, as withColumn did.
+    # (Spark resolves names case-insensitively, so compare lower-cased.)
+    taken = {c.lower() for c in df.columns}
+    rn = "_rn"
+    while rn in taken:
+        rn += "_"
     w = Window.partitionBy(*keys).orderBy(*order)
-    out = (df.select("*", F.row_number().over(w).alias("_rn"))
-           .filter(F.col("_rn") <= k))
-    final = list(df.columns)
-    if rank_col:
-        final.append(F.col("_rn").cast("long").alias(rank_col))
+    out = (df.select("*", F.row_number().over(w).alias(rn))
+           .filter(F.col(rn) <= k))
+    if not rank_col:
+        return out.select(*df.columns)
+    rank = F.col(rn).cast("long").alias(rank_col)
+    final = [rank if c.lower() == rank_col.lower() else c
+             for c in df.columns]
+    if rank_col.lower() not in taken:
+        final.append(rank)
     return out.select(*final)
 
 

@@ -1,7 +1,8 @@
 """Empirical scale probe — runs the scale-path operators on synthetic
 data 10-100× larger than sf0.1 to validate the claims in README
 ("would this plan survive a 100× scale-up?"). Not part of the gate
-(gate inputs are only driver testdata); writes /tmp only.
+(gate inputs are only driver testdata); writes only under the temp
+dir (``$TMPDIR``, default /tmp).
 
 Usage: python tools/scale_probe.py [n_rows] [dim] [n_queries] [sections]
 
@@ -17,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 import numpy as np
@@ -42,7 +44,8 @@ def main() -> None:
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    path = f"/tmp/scale_probe_{n}x{dim}.parquet"
+    path = os.path.join(tempfile.gettempdir(),
+                        f"scale_probe_{n}x{dim}.parquet")
     if not os.path.exists(path):
         rng = np.random.default_rng(7)
         # clustered data (256 centers) so IVF pruning has structure
@@ -84,11 +87,11 @@ def main() -> None:
         ivf_flat_search(idx, q, 10, n_probes=8, qvec_col="qv", method="blas") \
             .write.format("noop").mode("overwrite").save()
         out["ivf_search_sec"] = round(time.time() - t0, 2)
+        # warm repeat: the same one-pass search on a warm session
         t0 = time.time()
-        ivf_flat_search(idx, q, 10, n_probes=8, qvec_col="qv",
-                        method="broadcast") \
+        ivf_flat_search(idx, q, 10, n_probes=8, qvec_col="qv", method="blas") \
             .write.format("noop").mode("overwrite").save()
-        out["ivf_search_broadcast_sec"] = round(time.time() - t0, 2)
+        out["ivf_search_warm_sec"] = round(time.time() - t0, 2)
         scanned = 8 / 128
         out["ivf_vs_blas_speedup_expected"] = round(1 / scanned, 1)
 
@@ -140,7 +143,7 @@ def main() -> None:
         out["rabitq_search_sec"] = round(time.time() - t0, 2)
 
     if want("ivf_pq"):
-        # IVF-PQ: blas encode build + cogrouped LUT search
+        # IVF-PQ: blas encode build + one-pass LUT search
         from cuvs_spark.operators.ivf_pq import ivf_pq_build, ivf_pq_search
         t0 = time.time()
         pidx = ivf_pq_build(d, 128, 8, 4, centroids=cents, method="blas")
@@ -150,12 +153,11 @@ def main() -> None:
         ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas") \
             .write.format("noop").mode("overwrite").save()
         out["ivf_pq_search_sec"] = round(time.time() - t0, 2)
-        # broadcast path: codes never shuffle — should pull ahead of the
-        # cogroup exactly in this codes ≫ queries regime
+        # warm repeat: the codebook array is already on the index
         t0 = time.time()
-        ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="broadcast") \
+        ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas") \
             .write.format("noop").mode("overwrite").save()
-        out["ivf_pq_search_broadcast_sec"] = round(time.time() - t0, 2)
+        out["ivf_pq_search_warm_sec"] = round(time.time() - t0, 2)
 
     if want("lsh"):
         # Random-hyperplane LSH kNN: the regime where bucketing pays —
