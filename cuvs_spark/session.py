@@ -3,6 +3,16 @@
 The reference's ``cuvsResources_t`` (stream/memory handle,
 ``python/cuvs/cuvs/common/resources.pyx``) has no user-facing analog in
 Spark — the session + executor configs play that role (SURVEY.md §1.3).
+
+The session starts Python workers from the engine's own daemon,
+``cuvs_spark.pydaemon`` (``spark.python.daemon.module``). PySpark's stock
+daemon makes every task re-read the directories of Spark's own
+``pyspark.zip`` and spark-core jar before the task's function is
+entered, 0.13-0.28 s per Python stage on a 4-vCPU host; the engine's
+daemon reads them once per worker (see its docstring). Spark imports
+the daemon on executors, so ``cuvs_spark`` must be importable there —
+as the search closures already require. ``get_spark`` appends the
+directory holding the package to the workers' ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -10,6 +20,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g: the heap may grow to its
+    maximum in a long-lived session, and a 48g heap on a smaller host
+    is ended by the kernel's OOM killer, not by a Java OOM error."""
+    try:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{min(total_mb // 2, 48 * 1024)}m"
 
 
 def get_spark(app_name: str = "cuvs_spark",
@@ -42,7 +65,8 @@ def get_spark(app_name: str = "cuvs_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("CUVS_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("CUVS_SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Aggressive generated-method splitting: long-lived sessions
         # occasionally produced a whole-stage span whose processNext()
@@ -55,7 +79,16 @@ def get_spark(app_name: str = "cuvs_spark",
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", blas_threads)
         .config("spark.executorEnv.OMP_NUM_THREADS", blas_threads)
         .config("spark.executorEnv.MKL_NUM_THREADS", blas_threads)
+        .config("spark.python.daemon.module", "cuvs_spark.pydaemon")
     )
     spark = builder.getOrCreate()
+    # The daemon module is imported before any task, so the package's
+    # directory joins the workers' PYTHONPATH (SparkContext.environment
+    # holds spark.executorEnv.* from every source, including any
+    # PYTHONPATH the caller set; it is shipped with each Python function).
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [_PACKAGE_ROOT])
     spark.sparkContext.setLogLevel("WARN")
     return spark

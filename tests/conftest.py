@@ -13,7 +13,8 @@ SF_TINY = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def spark():
     from cuvs_spark import get_spark
-    s = get_spark("cuvs_spark_tests", cores=8, shuffle_partitions=8)
+    # cores follow the host (SPARK_GRAFT_CPUS, else os.cpu_count())
+    s = get_spark("cuvs_spark_tests", shuffle_partitions=8)
     yield s
 
 
