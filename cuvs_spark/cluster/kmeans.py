@@ -134,6 +134,13 @@ def coarse_probes(Q: np.ndarray, centroids, n_probes: int) -> np.ndarray:
     return out
 
 
+def gemm_argmin(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Nearest centroid of each float64 row of ``X``: argmin over
+    ``‖c‖² − 2·x·c`` from one GEMM, ties to the lowest label — the
+    labels of :func:`assign`'s ``blas`` kernel, bit for bit."""
+    return ((C * C).sum(1)[None, :] - 2.0 * (X @ C.T)).argmin(1)
+
+
 def assign(df: DataFrame, centroids, *, id_col: str = "id",
            vec_col: str = "vec", metric: str = "sqeuclidean",
            dist_col: str | None = None, method: str = "expr",
@@ -257,12 +264,11 @@ def _update_means(df: DataFrame, centroids, *, id_col: str, vec_col: str,
             C = bc.value
             kk, dd = C.shape
             s = np.zeros((kk, dd)); n = np.zeros(kk, dtype=np.int64)
-            cn = (C * C).sum(1)[None, :]
             for pdf in batches:
                 if pdf.empty:
                     continue
                 X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-                lab = (cn - 2.0 * (X @ C.T)).argmin(1)
+                lab = gemm_argmin(X, C)
                 np.add.at(s, lab, X)
                 np.add.at(n, lab, 1)
             for j in range(kk):

@@ -38,8 +38,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cuvs_spark.cluster.kmeans import (KMeansModel, assign,
-                                       coarse_sorted_sql, kmeans_fit)
+from cuvs_spark.cluster.kmeans import assign, coarse_sorted_sql, kmeans_fit
 from cuvs_spark.functions.distance import distance_sql_spark, is_min_close
 from cuvs_spark.operators.select_k import select_k
 
@@ -88,31 +87,11 @@ def ivf_flat_build(dataset: DataFrame, n_lists: int = 64, *,
         else:
             # trained path: one map-only pass emits (id, list_id, vec) —
             # GEMM argmin AND the vector carry, no label re-join shuffle
-            lists = _assign_with_vec(d, np.asarray(centroids, float))
+            lists = assign(d, centroids, method="blas", passthrough=True) \
+                .select("id", F.col("label").alias("list_id"),
+                        F.col("_v").alias("vec"))
     return IVFFlatIndex(centroids=np.asarray(centroids, float), lists=lists,
                         metric=metric)
-
-
-def _assign_with_vec(d: DataFrame, C: np.ndarray) -> DataFrame:
-    import pandas as pd
-
-    spark = d.sparkSession
-    bc = spark.sparkContext.broadcast(C)
-
-    def argmin(batches):
-        C = bc.value
-        cn = (C * C).sum(1)[None, :]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-            lab = (cn - 2.0 * (X @ C.T)).argmin(1)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "list_id": lab.astype(np.int32),
-                                "vec": pdf["vec"].to_numpy()})
-
-    return d.mapInPandas(argmin,
-                         schema="id long, list_id int, vec array<float>")
 
 
 def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
@@ -179,20 +158,26 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
 
 def _query_matrix(q: DataFrame, dim: int,
                   op: str) -> tuple[np.ndarray, np.ndarray]:
-    """A ``(qid, _qv)`` query batch on the driver → ``(qids, Q)``, Q in
-    float64 (exact for float32 and float64 inputs). Queries are small
-    by contract, like the brute-force query matrix. A null vector
-    probes nothing, as on the SQL path; a length other than the index
-    dim raises here, naming both, before any job over the index."""
+    """A ``(qid, _qv)`` query batch on the driver → ``(qids, Q)``
+    (small by contract). A null vector probes nothing, as on the SQL
+    path; a wrong length raises here, before any job over the index."""
     pdf = q.filter(F.col("_qv").isNotNull()).toPandas()
-    vecs = pdf["_qv"].to_numpy()
-    bad = next((len(v) for v in vecs if len(v) != dim), None)
+    qids = pdf["qid"].to_numpy(np.int64)
+    return qids, vec_matrix(qids, pdf["_qv"].to_numpy(), dim, op)
+
+
+def vec_matrix(ids: np.ndarray, vecs, dim: int, op: str) -> np.ndarray:
+    """One batch's vectors as a float64 ``(n, dim)`` matrix (exact for
+    float32 and float64 inputs); a null vector or a length other than
+    the index dim raises, naming the row's id, its length and the dim."""
+    bad = next(((i, v) for i, v in zip(ids, vecs)
+                if v is None or len(v) != dim), None)
     if bad is not None:
-        raise ValueError(f"{op}: query vectors have {bad} dims but the "
-                         f"index has {dim}")
-    Q = (np.vstack(vecs).astype(np.float64) if len(vecs)
-         else np.empty((0, dim)))
-    return pdf["qid"].to_numpy(np.int64), Q
+        what = "a null vector" if bad[1] is None else f"{len(bad[1])} dims"
+        raise ValueError(f"{op}: id {bad[0]} has {what} but the index "
+                         f"has {dim} dims")
+    return (np.vstack(vecs).astype(np.float64) if len(vecs)
+            else np.empty((0, dim)))
 
 
 def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,

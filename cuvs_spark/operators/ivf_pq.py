@@ -15,6 +15,14 @@ Spark design:
   or ``(id, list_id, rcodes array<int>)`` (SQ int8 residual codes),
   partitioned by list_id like IVF-Flat. 64-dim float32 rows become 8
   bytes (PQ) / 64 bytes (SQ).
+* **PQ build** — ``method="blas"`` (also ``transform``/``extend``) is
+  the reference's batch kernel (``ivf_pq_build.cuh:79-127``) as one
+  map pass: GEMM argmin, residual against the float32-narrowed
+  centres, optional rotation, per-subspace argmin; no join, no
+  shuffle. The codebook trains on the driver from one collect of the
+  seeded raw sample through the same NumPy code (``pq.pyx:198``), and
+  its float32-narrowed array serves the encode, ``codebook_df`` and
+  the index. ``method="expr"`` is the oracle path.
 * **PQ search** — the reference's per-query LUT is a *join*: the LUT
   relation ``(qid, sub, code, subdist)`` (n_queries × pq_dim × 2^bits
   rows — tiny, broadcast) joins the exploded probed codes on
@@ -42,17 +50,21 @@ Spark design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from functools import cached_property
+from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cuvs_spark.cluster.kmeans import assign, coarse_sorted_sql, kmeans_fit
+from cuvs_spark.cluster.kmeans import (coarse_sorted_sql, gemm_argmin,
+                                       kmeans_fit)
 from cuvs_spark.functions.distance import distance_sql_spark
+from cuvs_spark.operators.ivf_flat import vec_matrix
 from cuvs_spark.operators.select_k import select_k
-from cuvs_spark.preprocessing.pq import PQCodebook, _subvecs, pq_build
+from cuvs_spark.preprocessing.pq import (PQCodebook, _encode_expr,
+                                         _res_expr, _subvecs, _train_books,
+                                         codebook_array, pq_build, pq_codes,
+                                         train_sample)
 
 
 # The reference's full IVF-PQ metric surface (ivf_pq.pyx:48-60):
@@ -152,25 +164,17 @@ class IVFPQIndex:
     metric: str = "sqeuclidean"
     encode: str = "raw"            # "raw" (build_precomputed) | "residual"
     rotation: np.ndarray | None = None   # (dim, dim) orthogonal, or None
+    # codebook_df as an array; filled by a build, lazily by a load
+    codebook: np.ndarray | None = field(default=None, repr=False)
 
-    @cached_property
+    @property
     def codebook_array(self) -> np.ndarray:
-        """``(pq_dim, n_codes, sub_width)`` float64 codebook, collected
-        from ``codebook_df`` once per index: repeat NumPy searches run
-        no codebook job. Same float32-narrowed values the table holds."""
-        rows = self.codebook_df.collect()
-        CB = np.zeros((self.pq_dim, max(r["code"] for r in rows) + 1,
-                       len(rows[0]["centroid"])))
-        for r in rows:
-            CB[r["sub"], r["code"]] = r["centroid"]
-        return CB
-
-
-# residual expression shared by build + search (reference
-# select_residuals, ivf_pq_build.cuh:79-127)
-def _res_expr(v: str, cent: str) -> str:
-    return (f"zip_with({v}, {cent}, (x, c) -> "
-            f"CAST(x AS DOUBLE) - CAST(c AS DOUBLE))")
+        """``(pq_dim, n_codes, sub_width)`` float64 codebook with the
+        table's float32 values, collected at most once per index (and
+        kept by ``ivf_pq_extend``): repeat searches run no codebook job."""
+        if self.codebook is None:
+            self.codebook = codebook_array(self.codebook_df)
+        return self.codebook
 
 
 def _rand_rotation(dim: int, seed: int) -> np.ndarray:
@@ -179,12 +183,6 @@ def _rand_rotation(dim: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     Q, R = np.linalg.qr(rng.standard_normal((dim, dim)))
     return Q * np.sign(np.diag(R))
-
-
-def _cent_df(spark, centroids):
-    return spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "list_id int, centroid array<float>")
 
 
 def ivf_pq_build(dataset: DataFrame, n_lists: int = 32, pq_dim: int = 8,
@@ -232,103 +230,88 @@ def ivf_pq_build(dataset: DataFrame, n_lists: int = 32, pq_dim: int = 8,
             raise ValueError("force_random_rotation requires "
                              "encode='residual', method='blas'")
         rotation = _rand_rotation(centroids.shape[1], seed)
-    enc_in = _pq_enc_input(d, centroids, encode, rotation, method)
-    if codebook is None:
-        codebook = pq_build(enc_in, pq_dim, pq_bits,
-                            kmeans_n_iters=kmeans_n_iters, seed=seed)
+    if method != "blas":
+        enc_in = _pq_enc_input(d, centroids, encode)
+        if codebook is None:
+            codebook = pq_build(enc_in, pq_dim, pq_bits,
+                                kmeans_n_iters=kmeans_n_iters, seed=seed)
+    elif codebook is None:
+        ids, vecs = train_sample(d, seed, "PQ codebook")
+        _, R = _pq_lists(vec_matrix(ids, vecs, centroids.shape[1],
+                                    "ivf_pq_build"),
+                         centroids, encode, rotation)
+        codebook = PQCodebook(_train_books(R, pq_dim, 1 << pq_bits,
+                                           np.random.default_rng(seed),
+                                           kmeans_n_iters))
     cb_df = (codebook.to_df(spark) if isinstance(codebook, PQCodebook)
              else codebook)
-    codes = _pq_encode(enc_in, cb_df, pq_dim, method)
+    CB = codebook_array(codebook) if method == "blas" else None
+    codes = (_pq_encode(enc_in, cb_df, pq_dim) if CB is None else
+             _pq_encode_blas(d, centroids, CB, encode, rotation,
+                             "ivf_pq_build"))
     return IVFPQIndex(centroids=centroids, codebook_df=cb_df, codes=codes,
                       pq_dim=pq_dim, metric=metric, encode=encode,
-                      rotation=rotation)
+                      rotation=rotation, codebook=CB)
 
 
-def _pq_enc_input(d: DataFrame, centroids: np.ndarray, encode: str,
-                  rotation: np.ndarray | None,
-                  method: str) -> DataFrame:
-    """``(id, list_id, vec)`` rows ready for PQ encoding: assigned to
-    their coarse list and, for ``encode='residual'``, shifted by the
-    list center (then rotated when a build-time rotation exists)."""
-    spark = d.sparkSession
-    if method != "blas":
-        # r14: expr assignment as a map-only literal fold — label AND
-        # the list center come out of one projection (no assign
-        # aggregate, no join-back, no centroid join)
-        best = F.expr(f"element_at({coarse_sorted_sql('vec', centroids)}, 1)")
-        d_lab = d.withColumn("_b", best).select(
-            "id", F.col("_b.l").cast("long").alias("list_id"),
-            F.col("_b.cv").alias("_cent"), "vec")
-        if encode == "residual":
-            enc_in = d_lab.select(
-                "id", "list_id",
-                F.expr(_res_expr("vec", "_cent")).alias("vec"))
-            if rotation is not None:
-                Rb = spark.sparkContext.broadcast(rotation)
-
-                def rot(batches):
-                    import pandas as pd
-                    for pdf in batches:
-                        if pdf.empty:
-                            continue
-                        X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-                        pdf["vec"] = list(X @ Rb.value.T)
-                        yield pdf
-
-                enc_in = enc_in.mapInPandas(
-                    rot, "id long, list_id long, vec array<double>")
-            return enc_in
-        return d_lab.select("id", "list_id", "vec")
-    lab = assign(d, centroids, metric="sqeuclidean", method="blas")
+def _pq_lists(X: np.ndarray, centroids: np.ndarray, encode: str,
+              rotation: np.ndarray | None):
+    """Float64 rows → ``(list ids, vectors to encode)``: GEMM argmin,
+    then for ``encode='residual'`` the residual against the float32-
+    narrowed centres (as the expr path and the search use), rotated."""
+    lab = gemm_argmin(X, centroids)
     if encode == "residual":
-        cent = _cent_df(spark, centroids)
-        enc_in = (d.join(lab.withColumnRenamed("label", "list_id"), "id")
-                  .join(F.broadcast(cent), "list_id")
-                  .select("id", "list_id",
-                          F.expr(_res_expr("vec", "centroid")).alias("vec")))
+        X = X - centroids[lab].astype(np.float32)
         if rotation is not None:
-            Rb = spark.sparkContext.broadcast(rotation)
-
-            def rot(batches):
-                import pandas as pd
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-                    pdf["vec"] = list(X @ Rb.value.T)
-                    yield pdf
-
-            enc_in = enc_in.mapInPandas(
-                rot, "id long, list_id long, vec array<double>")
-        return enc_in
-    return d.join(lab.withColumnRenamed("label", "list_id"), "id") \
-        .select("id", "list_id", "vec")
+            X = X @ rotation.T
+    return lab, X
 
 
-def _pq_encode(enc_in: DataFrame, cb_df: DataFrame, pq_dim: int,
-               method: str) -> DataFrame:
-    """Encode ``(id, list_id, vec)`` against a broadcast codebook →
-    ``(id, list_id, codes)``."""
-    if method == "blas":
-        from cuvs_spark.preprocessing.pq import pq_transform
-        return (pq_transform(enc_in.select("id", "vec"), cb_df,
-                             method="blas")
-                .join(enc_in.select("id", "list_id"), "id")
-                .select("id", "list_id", "codes"))
-    # per-subspace argmin against the broadcast codebook
-    sv = _subvecs(enc_in.select("id", "vec"), pq_dim,
-                  id_col="id", vec_col="vec")
-    dist = F.expr(distance_sql_spark("sqeuclidean", "subvec", "centroid"))
-    best = (sv.join(F.broadcast(cb_df), "sub")
-            .select("id", "sub",
-                    F.struct(dist.alias("d"), F.col("code").alias("c"))
-                    .alias("_s"))
-            .groupBy("id", "sub").agg(F.min("_s").alias("_b"))
-            .select("id", "sub", F.col("_b.c").alias("code")))
-    return (best.groupBy("id")
-            .agg(F.array_sort(F.collect_list(F.struct("sub", "code")))
-                 .alias("_sc"))
-            .select("id", F.expr("transform(_sc, x -> x.code)").alias("codes"))
+def _pq_encode_blas(d: DataFrame, centroids: np.ndarray, CB: np.ndarray,
+                    encode: str, rotation: np.ndarray | None,
+                    op: str) -> DataFrame:
+    """One map pass ``(id, vec)`` → ``(id long, list_id int, codes
+    array<int>)``, as the reference's batch kernel selects, shifts and
+    encodes (``ivf_pq_build.cuh:79-127``); no join, no shuffle."""
+    import pandas as pd
+    dim = centroids.shape[1]
+    bc = d.sparkSession.sparkContext.broadcast(
+        (centroids, CB, encode, rotation))
+
+    def encode_batches(batches):
+        C, CB, encode, rotation = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["id"].to_numpy(np.int64)
+            X = vec_matrix(ids, pdf["vec"].to_numpy(), dim, op)
+            lab, X = _pq_lists(X, C, encode, rotation)
+            yield pd.DataFrame({"id": ids, "list_id": lab.astype(np.int32),
+                                "codes": list(pq_codes(X, CB))})
+
+    return d.mapInPandas(encode_batches,
+                         "id long, list_id int, codes array<int>")
+
+
+def _pq_enc_input(d: DataFrame, centroids: np.ndarray,
+                  encode: str) -> DataFrame:
+    """``(id, list_id, vec)`` rows for the expr encode: label and list
+    center from one map-only literal fold (r14), then for
+    ``encode='residual'`` the shift by the center."""
+    best = F.expr(f"element_at({coarse_sorted_sql('vec', centroids)}, 1)")
+    d_lab = d.withColumn("_b", best).select(
+        "id", F.col("_b.l").cast("long").alias("list_id"),
+        F.col("_b.cv").alias("_cent"), "vec")
+    if encode == "residual":
+        return d_lab.select("id", "list_id",
+                            F.expr(_res_expr("vec", "_cent")).alias("vec"))
+    return d_lab.select("id", "list_id", "vec")
+
+
+def _pq_encode(enc_in: DataFrame, cb_df: DataFrame,
+               pq_dim: int) -> DataFrame:
+    """Expr-encode ``(id, list_id, vec)`` → ``(id, list_id, codes)``."""
+    return (_encode_expr(enc_in.select("id", "vec"), cb_df, pq_dim)
             .join(enc_in.select("id", "list_id"), "id")
             .select("id", "list_id", "codes"))
 
@@ -353,20 +336,23 @@ def ivf_pq_transform(index: IVFPQIndex, dataset: DataFrame, *,
                      method: str = "expr") -> DataFrame:
     """Encode vectors with an EXISTING index's coarse centers and
     codebook WITHOUT extending it (``ivf_pq.pyx:987 transform``:
-    returns labels + codes) → ``(id, list_id, codes array<int>)``."""
+    returns labels + codes) → ``(id, list_id, codes array<int>)``.
+    ``method="blas"`` — forced when the index has a rotation, which
+    only has a BLAS form — is the build's one-pass kernel."""
     d = dataset.select(F.col(id_col).cast("long").alias("id"),
                        F.col(vec_col).alias("vec"))
     if index.metric == "cosine":
         from cuvs_spark.functions.vector import l2_normalize
         d = d.withColumn("vec", l2_normalize("vec"))
-    if index.rotation is not None:
-        method = "blas"          # the rotation only has a BLAS form
-    enc_in = _pq_enc_input(d, index.centroids, index.encode,
-                           index.rotation, method)
-    return _pq_encode(enc_in, index.codebook_df, index.pq_dim, method)
+    if method == "blas" or index.rotation is not None:
+        return _pq_encode_blas(d, index.centroids, index.codebook_array,
+                               index.encode, index.rotation,
+                               "ivf_pq_transform")
+    enc_in = _pq_enc_input(d, index.centroids, index.encode)
+    return _pq_encode(enc_in, index.codebook_df, index.pq_dim)
 
 
-def _pq_lut_score(Q, C, CB, S, w, cent_vec, rot, metric):
+def _pq_lut_score(Q, C, CB, cent_vec, rot, metric):
     """Per-list LUT scoring shared by the blas/broadcast paths →
     the (p, m) score matrix for queries ``Q`` against the list's code
     matrix ``C``. L2 family: the reference LUT (shift the query by the
@@ -377,6 +363,7 @@ def _pq_lut_score(Q, C, CB, S, w, cent_vec, rot, metric):
     added — ``q·(c + Rᵀr̂) = q·c + (Rq)·r̂``; cosine reports
     ``1 − q̂·x̂`` over the (already entry-normalized) inputs."""
     ip = _pq_lut_kind(metric) == "inner_product"
+    S, _, w = CB.shape
     qc = None
     if ip:
         if cent_vec is not None:
@@ -436,7 +423,9 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
     if method in ("blas", "broadcast"):
         from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
         qids, Q = _query_matrix(q, index.centroids.shape[1], "ivf_pq_search")
-        CB = index.codebook_array
+        # residuals were encoded against the float32-narrowed centres
+        cent = (index.centroids.astype(np.float32).astype(np.float64)
+                if residual else None)
 
         def score(consts, lid, C, Q):
             CB, cent, rot = consts
@@ -444,15 +433,13 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
             # build-time rotation); IP residual: the per-list q·c
             # constant instead. Floor-width slicing inside keeps parity
             # with _subvecs when dim % pq_dim != 0.
-            return _pq_lut_score(Q, C.astype(np.int64), CB, CB.shape[0],
-                                 CB.shape[2],
+            return _pq_lut_score(Q, C.astype(np.int64), CB,
                                  cent[lid] if cent is not None else None,
                                  rot, metric)
 
         return _probe_scan(codes_t, "codes", index.centroids, qids, Q,
                            n_probes, k, minimize, score,
-                           (CB, index.centroids if residual else None,
-                            index.rotation))
+                           (index.codebook_array, cent, index.rotation))
     from cuvs_spark.plans.layout import spread_narrow
     q = spread_narrow(q, "qid")
     # r14: coarse probes as a map-only literal slice (guide §2.4) —
@@ -797,7 +784,6 @@ def ivf_sq_build(dataset: DataFrame, n_lists: int = 32, *,
     if metric not in METRICS:
         raise ValueError(f"ivf_sq_build: unknown metric {metric!r}; "
                          f"valid: {sorted(METRICS)}")
-    spark = dataset.sparkSession
     d = dataset.select(F.col(id_col).cast("long").alias("id"),
                        F.col(vec_col).alias("vec"))
     if centroids is None:
@@ -821,7 +807,6 @@ def ivf_sq_extend(index: IVFSQIndex, new_rows: DataFrame, *,
     and range are immutable, so the extended index scores identically
     to one built over the union."""
     from dataclasses import replace
-    spark = new_rows.sparkSession
     d = new_rows.select(F.col(id_col).cast("long").alias("id"),
                         F.col(vec_col).alias("vec"))
     best = F.expr(
@@ -1014,7 +999,6 @@ def ivf_bq_search(index: IVFBQIndex, queries: DataFrame, k: int = 10,
     from cuvs_spark.operators.pairwise import refine as exact_refine
     from cuvs_spark.preprocessing.quantize import binary_quantize
 
-    spark = queries.sparkSession
     from cuvs_spark.plans.layout import spread_narrow
     q = spread_narrow(
         queries.select(F.col(qid_col).cast("long").alias("qid"),

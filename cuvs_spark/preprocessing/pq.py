@@ -66,10 +66,10 @@ class VPQQuantizer:
         return spark.createDataFrame(rows, "vlabel int, vcent array<double>")
 
 
-# residual of a vector vs its VQ center — double-exact elementwise
-# subtraction, the same fold both engines use (see
-# operators/ivf_pq._res_expr and its DuckDB twin)
-def _vq_res_expr(v: str, cent: str) -> str:
+# residual of a vector vs its VQ / IVF-PQ list center (the reference's
+# select_residuals, ivf_pq_build.cuh:79-127) — double-exact elementwise
+# subtraction, the same fold both engines use
+def _res_expr(v: str, cent: str) -> str:
     return (f"zip_with({v}, {cent}, (x, c) -> "
             f"CAST(x AS DOUBLE) - CAST(c AS DOUBLE))")
 
@@ -94,25 +94,60 @@ def pq_build(df: DataFrame, pq_dim: int = 8, pq_bits: int = 4, *,
              max_train_rows: int = 20000) -> PQCodebook:
     """Train per-subspace codebooks (k = 2^pq_bits) — ``pq.pyx:198``.
 
-    Uses ``max_train_rows`` seeded subsampling, mirroring the
-    reference's ``max_train_points_per_pq_code`` guard. The capped
-    sample is collected ONCE and all per-subspace Lloyd loops run
-    driver-side in NumPy — one Spark job instead of
-    ``pq_dim * kmeans_n_iters``; the sample bound (not the dataset
-    size) fixes driver memory, so this is the 100 TB shape too (the
-    reference likewise trains on a host-side subsample)."""
-    n_codes = 1 << pq_bits
+    The ``max_train_rows`` seeded sample (:func:`train_sample`, the
+    reference's ``max_train_points_per_pq_code`` guard) is collected
+    ONCE and every per-subspace Lloyd loop runs driver-side in NumPy:
+    one Spark job, and the sample bound (not the dataset size) fixes
+    driver memory, as the reference's host-side subsample does."""
     d = df.select(F.col(id_col).cast("long").alias("id"),
                   F.col(vec_col).alias("vec"))
-    sample = (d.withColumn("_h", F.xxhash64("id", F.lit(seed)))
-              .orderBy("_h", "id").limit(max_train_rows)
-              .select("vec").collect())
-    if not sample:
-        raise ValueError("cannot train PQ codebook on empty input")
-    X = np.array([r["vec"] for r in sample], dtype=np.float64)
-    return PQCodebook(codebook=_train_books(X, pq_dim, n_codes,
+    _, vecs = train_sample(d, seed, "PQ codebook", max_train_rows)
+    X = np.vstack(vecs).astype(np.float64)
+    return PQCodebook(codebook=_train_books(X, pq_dim, 1 << pq_bits,
                                             np.random.default_rng(seed),
                                             kmeans_n_iters))
+
+
+def train_sample(d: DataFrame, seed: int, what: str,
+                 max_rows: int = 20000) -> tuple[np.ndarray, list]:
+    """Up to ``max_rows`` ``(id, vec)`` rows in seeded ``xxhash64(id,
+    seed)`` order → ``(ids, vecs)``, in one job. A row collect: it merges
+    the per-partition top-k on the driver, where an Arrow collect adds a
+    single-partition exchange of every candidate row."""
+    rows = (d.withColumn("_h", F.xxhash64("id", F.lit(seed)))
+            .orderBy("_h", "id").limit(max_rows)
+            .select("id", "vec").collect())
+    if not rows:
+        raise ValueError(f"cannot train {what} on empty input")
+    return (np.array([r["id"] for r in rows], np.int64),
+            [r["vec"] for r in rows])
+
+
+def codebook_array(book: PQCodebook | DataFrame) -> np.ndarray:
+    """``(pq_dim, n_codes, sub_width)`` float64 codebook with the
+    float32 values of its ``array<float>`` table: narrowed with no job
+    from a :class:`PQCodebook`, or collected from a table."""
+    if isinstance(book, PQCodebook):
+        return book.codebook.astype(np.float32).astype(np.float64)
+    rows = book.collect()
+    CB = np.zeros((max(r["sub"] for r in rows) + 1,
+                   max(r["code"] for r in rows) + 1,
+                   len(rows[0]["centroid"])))
+    for r in rows:
+        CB[r["sub"], r["code"]] = r["centroid"]
+    return CB
+
+
+def pq_codes(X: np.ndarray, CB: np.ndarray) -> np.ndarray:
+    """Per-subspace argmin of float64 rows ``X`` against ``CB`` → ``(n,
+    pq_dim)`` int32 codes (ties to the lowest code; remainder dims sliced
+    off like ``_subvecs``), one subspace at a time to bound the tile."""
+    S, _, w = CB.shape
+    X3 = X[:, :S * w].reshape(len(X), S, w)
+    codes = np.empty((len(X), S), np.int32)
+    for s in range(S):
+        codes[:, s] = ((X3[:, s, None, :] - CB[s]) ** 2).sum(-1).argmin(-1)
+    return codes
 
 
 def _lloyd(S: np.ndarray, k: int, rng, iters: int) -> np.ndarray:
@@ -151,12 +186,8 @@ def vpq_build(df: DataFrame, pq_dim: int = 8, pq_bits: int = 4,
     n_codes = 1 << pq_bits
     d = df.select(F.col(id_col).cast("long").alias("id"),
                   F.col(vec_col).alias("vec"))
-    sample = (d.withColumn("_h", F.xxhash64("id", F.lit(seed)))
-              .orderBy("_h", "id").limit(max_train_rows)
-              .select("vec").collect())
-    if not sample:
-        raise ValueError("cannot train VPQ quantizer on empty input")
-    X = np.array([r["vec"] for r in sample], dtype=np.float64)
+    _, vecs = train_sample(d, seed, "VPQ quantizer", max_train_rows)
+    X = np.vstack(vecs).astype(np.float64)
     rng = np.random.default_rng(seed)
     C = (np.asarray(vq_centroids, dtype=np.float64)
          if vq_centroids is not None
@@ -177,19 +208,9 @@ def pq_transform(df: DataFrame, book: PQCodebook | DataFrame, *,
     tensor in one NumPy pass (map-only, no subvector explosion or
     argmin shuffle) — the bulk-encode path for index builds at scale.
     """
-    spark = df.sparkSession
-    cb = book if isinstance(book, DataFrame) else book.to_df(spark)
-    pq_dim = (book.pq_dim if isinstance(book, PQCodebook)
-              else cb.agg(F.max("sub")).head()[0] + 1)
     if method == "blas":
         import pandas as pd
-        cb_rows = cb.collect()
-        S = pq_dim
-        n_codes = max(r["code"] for r in cb_rows) + 1
-        w = len(cb_rows[0]["centroid"])
-        CB = np.zeros((S, n_codes, w))
-        for r in cb_rows:
-            CB[r["sub"], r["code"]] = r["centroid"]
+        CB = codebook_array(book)
         d = df.select(F.col(id_col).cast("long").alias("id"),
                       F.col(vec_col).alias("vec"))
 
@@ -198,15 +219,21 @@ def pq_transform(df: DataFrame, book: PQCodebook | DataFrame, *,
                 if pdf.empty:
                     continue
                 X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
-                # slice off remainder dims first (dim % pq_dim != 0) to
-                # match the expr path's _subvecs floor-width semantics
-                X3 = X[:, :S * w].reshape(len(X), S, w)
-                D = ((X3[:, :, None, :] - CB[None]) ** 2).sum(-1)
-                codes = D.argmin(-1).astype(np.int32)   # (n, S)
                 yield pd.DataFrame({"id": pdf["id"],
-                                    "codes": list(codes)})
+                                    "codes": list(pq_codes(X, CB))})
 
         return d.mapInPandas(encode, "id long, codes array<int>")
+    spark = df.sparkSession
+    cb = book if isinstance(book, DataFrame) else book.to_df(spark)
+    pq_dim = (book.pq_dim if isinstance(book, PQCodebook)
+              else cb.agg(F.max("sub")).head()[0] + 1)
+    return _encode_expr(df, cb, pq_dim, id_col=id_col, vec_col=vec_col)
+
+
+def _encode_expr(df: DataFrame, cb: DataFrame, pq_dim: int, *,
+                 id_col: str = "id", vec_col: str = "vec") -> DataFrame:
+    """The expr encode → ``(id, codes)``: per-subspace argmin join
+    against the broadcast codebook table, codes in subspace order."""
     sv = _subvecs(df, pq_dim, id_col=id_col, vec_col=vec_col)
     dist = F.expr(distance_sql_spark("sqeuclidean", "subvec", "centroid"))
     best = (sv.join(F.broadcast(cb), "sub")
@@ -259,7 +286,6 @@ def vpq_transform(df: DataFrame, quant: VPQQuantizer, *,
         import pandas as pd
         C = quant.vq_centroids
         CB = quant.pq.codebook
-        S, n_codes, w = CB.shape
 
         def encode(batches):
             for pdf in batches:
@@ -267,12 +293,10 @@ def vpq_transform(df: DataFrame, quant: VPQQuantizer, *,
                     continue
                 X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
                 lab = ((X[:, None, :] - C[None]) ** 2).sum(-1).argmin(1)
-                R = (X - C[lab])[:, :S * w].reshape(len(X), S, w)
-                D = ((R[:, :, None, :] - CB[None]) ** 2).sum(-1)
                 yield pd.DataFrame({"id": pdf["id"],
                                     "vq_label": lab.astype(np.int32),
-                                    "codes": list(D.argmin(-1)
-                                                  .astype(np.int32))})
+                                    "codes": list(pq_codes(X - C[lab],
+                                                           CB))})
 
         return d.mapInPandas(encode,
                              "id long, vq_label int, codes array<int>")
@@ -300,7 +324,7 @@ def vpq_residuals(df: DataFrame, vq: DataFrame, *, id_col: str = "id",
     return (d.join(lab, "id")
             .join(F.broadcast(vq), F.col("vq_label") == F.col("vlabel"))
             .select("id", "vq_label",
-                    F.expr(_vq_res_expr("vec", "vcent")).alias("rvec")))
+                    F.expr(_res_expr("vec", "vcent")).alias("rvec")))
 
 
 def vpq_inverse_transform(codes_df: DataFrame, quant: VPQQuantizer, *,

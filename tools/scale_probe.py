@@ -143,21 +143,43 @@ def main() -> None:
         out["rabitq_search_sec"] = round(time.time() - t0, 2)
 
     if want("ivf_pq"):
-        # IVF-PQ: blas encode build + one-pass LUT search
+        # IVF-PQ: blas encode builds (raw, and residual in the
+        # benchmark's shape) + one-pass LUT search; each timed call
+        # also records the Spark jobs and stages it ran
         from cuvs_spark.operators.ivf_pq import ivf_pq_build, ivf_pq_search
-        t0 = time.time()
-        pidx = ivf_pq_build(d, 128, 8, 4, centroids=cents, method="blas")
-        pidx.codes.cache().count()
-        out["ivf_pq_build_sec"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas") \
-            .write.format("noop").mode("overwrite").save()
-        out["ivf_pq_search_sec"] = round(time.time() - t0, 2)
+        sc = spark.sparkContext
+
+        def timed(key, fn):
+            group = f"scale_probe-{key}"
+            sc.setJobGroup(group, key)
+            t0 = time.time()
+            try:
+                res = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            out[f"{key}_sec"] = round(time.time() - t0, 2)
+            st = sc.statusTracker()
+            jobs = st.getJobIdsForGroup(group)
+            out[f"{key}_jobs_stages"] = [
+                len(jobs), sum(len(st.getJobInfo(j).stageIds) for j in jobs)]
+            return res
+
+        def build(encode, pq_dim, pq_bits):
+            pidx = ivf_pq_build(d, 128, pq_dim, pq_bits, centroids=cents,
+                                encode=encode, method="blas")
+            pidx.codes.cache().count()
+            return pidx
+
+        def search():
+            ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas") \
+                .write.format("noop").mode("overwrite").save()
+
+        pidx = timed("ivf_pq_build", lambda: build("raw", 8, 4))
+        rix = timed("ivf_pq_build_residual", lambda: build("residual", 16, 5))
+        rix.codes.unpersist()
+        timed("ivf_pq_search", search)
         # warm repeat: the codebook array is already on the index
-        t0 = time.time()
-        ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas") \
-            .write.format("noop").mode("overwrite").save()
-        out["ivf_pq_search_warm_sec"] = round(time.time() - t0, 2)
+        timed("ivf_pq_search_warm", search)
 
     if want("lsh"):
         # Random-hyperplane LSH kNN: the regime where bucketing pays —
