@@ -2798,25 +2798,6 @@ register("ivf_flat_search_blas", _ivf_blas,
                                  _IVF_CENT_SQL, 10, _IVF_PROBES) + ")")
 
 
-def _ivf_broadcast(spark, sf_dir):
-    """``method="broadcast"``, an alias of the one-pass ``blas`` search
-    (inverted file never shuffles) — hash-equal to the expr plan on
-    ids+rank."""
-    from cuvs_spark.operators.ivf_flat import ivf_flat_build, ivf_flat_search
-    d = emb_dataset(spark, sf_dir)
-    idx = ivf_flat_build(d, _IVF_LISTS,
-                         centroids=_fixed_centroids(spark, sf_dir, _IVF_LISTS))
-    q = emb_queries(spark, sf_dir, 20)
-    return ivf_flat_search(idx, q, 10, _IVF_PROBES, qvec_col="qv",
-                           method="broadcast").select("qid", "nid", "rank")
-
-
-register("ivf_flat_search_broadcast", _ivf_broadcast,
-         "SELECT qid, nid, rank FROM ("
-         + O.ivf_flat_search_sql(_DA_SQL, _Q_SQL.format(nq=20),
-                                 _IVF_CENT_SQL, 10, _IVF_PROBES) + ")")
-
-
 def _ivf_prefilter(spark, sf_dir):
     """Bitset prefilter on an IVF index (filters.pyx applies to every
     index type): id-predicate filters the inverted file before any
@@ -4817,239 +4798,3 @@ SELECT CAST(1 AS BIGINT) AS epoch, CAST(1 AS BIGINT) AS replay,
 
 register("bloom_stream_exact_epochs", _bloom_stream_epochs,
          _bloom_stream_epochs_sql())
-
-
-# --- driver-window ordering ------------------------------------------------
-# The verify harness checks queries() in dict-insertion order and (as of
-# round 2) records only the first 50 rows in CORRECTNESS_r{N}.json.  Round 2
-# registered 103 queries, so slots 50+ (the whole quantized-index / graph /
-# stats / sparse / KDE surface) never reached the hard signal.  We therefore
-# reorder the registry explicitly: a few canary rows that have been green
-# since round 1, then every query that has never had a driver row.  Queries
-# past slot 50 remain fully checked by tools/check_oracle.py and pytest and
-# rotate into the window in later rounds.
-_WINDOW_PRIORITY = [
-    # ROUND-15 WINDOW (optimization round 2 of 2) — 10 staleness rows
-    # (the r08 head, pinned by the declared r15 plan: the oldest union
-    # rows, displaced twice already, never again) + 2 canaries + 26
-    # RE-GATES + 12 staleness-fill rows = 50 exactly.
-    #
-    # Tier 3 re-gates, per the standing "any operator rewrite re-gates
-    # its gates before staleness refresh" rule.  The r15 diff's one
-    # value-relevant plan rewrite is the carry-the-query-vector probe
-    # explode (commit 9efaebb, inherited from the interrupted session
-    # and verified green on arrival): every IVF fine stage that
-    # re-joined probes back to q on qid now reads _qv from the probe
-    # projection — one shuffle exchange + two broadcast exchanges
-    # removed from every ivf_flat/pq/sq/bq/rabitq/scann search plan
-    # (plans/r15/*_after.txt vs plans/r14).  All 24 consumers of those
-    # probe stages are re-gated: the 6 ivf_flat variants, 5 ivf_pq
-    # variants (transform_codes does NOT search — its enc path is
-    # untouched this round), 3 ivf_sq, ivf_bq, 2 rabitq, 3 scann
-    # search variants (soar_labels is build-side, untouched), the 3
-    # tiered compositions and composite_search_ip.  Plus
-    # text_chi2_terms (label totals now aggregate the un-spread
-    # source — one exchange removed) and refine_cosine (factored-norm
-    # cosine template).
-    #
-    # NOT re-gated, with the r14 precedent class for each, all
-    # re-verified hash-exact locally this round: the CC observe-fused
-    # convergence + curate (physical job structure only — the plan and
-    # every label are unchanged; same class as the r14 spread/
-    # localCheckpoint placements), bm25 dfreq restructuring and the
-    # maxsim/select_k construction collapse (canonicalized optimized
-    # plans byte-identical — the change-14 class, strictly weaker),
-    # kde euclidean gates (only the cosine branch changed; their
-    # expression trees are untouched).
-    #
-    # Staleness fill order (after the re-gates): the six r14-build
-    # displacements (gram_linear/gram_rbf/gram_tanh/
-    # knn_bf_jensenshannon/knn_bf_kl_divergence/knn_minkowski_p3, all
-    # last-verified r09), then the r09 remainder in sorted order
-    # (cagra_merge, cagra_optimize, dedup_ngram_jaccard_lsh,
-    # dedup_simhash_near_dup, events_sessionize,
-    # events_windowed_counts).  Next-in-line for r16, still r09-stale:
-    # kde_cosine_kernel, kde_exponential, kde_linear, kde_tophat,
-    # knn_bitwise_hamming, knn_custom_udf_metric, pairwise_haversine,
-    # preprocess_* (3), sparse_* (2), stats_* (5), vamana_build.
-    #
-    # Tier 5 head — the ten r08 rows, per the declared r15 plan:
-    "knn_bf_canberra",
-    "knn_bf_chebyshev",
-    "knn_bf_cityblock",
-    "knn_bf_correlation",
-    "knn_bf_dice",
-    "knn_bf_hamming",
-    "knn_bf_hellinger",
-    "knn_bf_jaccard",
-    "knn_bf_russellrao",
-    "pairwise_sqeuclidean",
-    # Tier 4 — canaries (red/err in r3, permanent watch):
-    "gram_polynomial",
-    "kmeans_fit_centroids",
-    # Tier 3 — re-gates: carry-qv probe-explode consumers,
-    "ivf_flat_search",
-    "ivf_flat_search_blas",
-    "ivf_flat_search_trained",
-    "ivf_flat_extend_search",
-    "ivf_flat_search_broadcast",
-    "ivf_flat_search_prefilter",
-    "ivf_pq_search",
-    "ivf_pq_search_residual",
-    "ivf_pq_search_cosine",
-    "ivf_pq_search_refined",
-    "ivf_pq_extend_search",
-    "ivf_sq_search",
-    "ivf_sq_search_ip",
-    "ivf_sq_extend_search",
-    "ivf_bq_search",
-    "ivf_rabitq_search",
-    "ivf_rabitq_search_blas",
-    "scann_search_pq",
-    "scann_search_reorder",
-    "scann_search_reorder_blas",
-    "tiered_search",
-    "tiered_search_ip",
-    "tiered_compaction_search",
-    "composite_search_ip",
-    # ... the chi2 totals-source change and the factored-cosine refine:
-    "text_chi2_terms",
-    "refine_cosine",
-    # Staleness fill — the six r14-build displacements first,
-    "gram_linear",
-    "gram_rbf",
-    "gram_tanh",
-    "knn_bf_jensenshannon",
-    "knn_bf_kl_divergence",
-    "knn_minkowski_p3",
-    # ... then the r09 remainder in sorted order:
-    "cagra_merge",
-    "cagra_optimize",
-    "dedup_ngram_jaccard_lsh",
-    "dedup_simhash_near_dup",
-    "events_sessionize",
-    "events_windowed_counts",
-]
-
-_WINDOW_R14 = [
-    # ROUND-14 WINDOW (kept for the record; superseded by the r15 list
-    # above) — 1 novel + 46 RE-GATES + 2 canaries + 1 staleness row =
-    # 50 exactly.  The
-    # optimization diff structurally rewrote the expression pipelines
-    # of most ANN search paths (fixed-centroid argmin/top-probe stages
-    # → map-only literal folds), the cosine distance factorization
-    # (per-side norm hoisting), the connected-components round
-    # structure, the curate marking fusion, the bm25 join order, and
-    # the classify/dsir/chi2 staging — every gate whose VALUES flow
-    # through a rewritten expression tree is re-gated here (tier 3),
-    # even though all were re-verified bit-exact locally.  The build
-    # round's planned 47-row staleness tranche is displaced to r15
-    # wholesale (see CLAUDE.md for the r15 arithmetic); 14 of its rows
-    # re-enter this window anyway as re-gates.  Pushed-out lowest-risk
-    # re-gate twins, per the >50 escape rule: kmeans_lloyd_step (thin
-    # wrapper over the same _update_means expr path that
-    # kmeans_predict / kmeans_cluster_cost and the kmeans_fit_centroids
-    # canary exercise in-window), ivf_pq_save_load_search /
-    # ivf_sq_save_load_search (the save/load layer is UNCHANGED this
-    # round; their search paths are the in-window ivf_pq_search /
-    # ivf_sq_search code), sample_dsir_topk / sample_dsir_threshold
-    # (thin compositions of the in-window text_dsir_importance).
-    # Spread-only changes (hash-repartition placement, no expression
-    # change: text._doc, dedup._doc_spread, knn dataset side) are NOT
-    # treated as value-relevant re-gates.
-    #
-    # Tier 2 — round-14 novel gate: composite_search_ip, the
-    # composite::index serving composition end to end — two IVF-flat
-    # sub-indexes over disjoint id halves, both inner_product (one
-    # registered via its `dot` ALIAS, driver-gating the r12
-    # canonical-name homogeneity assert's alias path), merged through
-    # knn_merge_parts max-close vs the union+DESC-merge twin.  Doubly
-    # load-bearing now: its sub-index searches run the r14 literal
-    # coarse-probe folds.
-    "composite_search_ip",
-    # Tier 4 — canaries: red/err in r3, fixed in r4/5, permanent watch.
-    # (kmeans_fit_centroids is ALSO a re-gate this round: the expr
-    # assign/update path it pins now runs the literal argmin fold.)
-    "gram_polynomial",
-    "kmeans_fit_centroids",
-    # Tier 3 — re-gates.  IVF coarse-probe/assign literal-fold family
-    # (every search below runs the rewritten probe/assign stages; the
-    # trained/extend/broadcast/prefilter variants cover the build,
-    # extend and filter compositions of the same rewrite):
-    "ivf_flat_search",
-    "ivf_flat_search_blas",
-    "ivf_flat_search_trained",
-    "ivf_flat_extend_search",
-    "ivf_flat_search_broadcast",
-    "ivf_flat_search_prefilter",
-    "ivf_pq_search",
-    "ivf_pq_search_residual",
-    "ivf_pq_search_cosine",
-    "ivf_pq_search_refined",
-    "ivf_pq_extend_search",
-    "ivf_pq_transform_codes",
-    "ivf_sq_search",
-    "ivf_sq_search_ip",
-    "ivf_sq_extend_search",
-    "ivf_bq_search",
-    "ivf_rabitq_search",
-    "ivf_rabitq_search_blas",
-    "scann_search_pq",
-    "scann_search_reorder",
-    "scann_search_reorder_blas",
-    "scann_soar_labels",
-    "tiered_search",
-    "tiered_search_ip",
-    "tiered_compaction_search",
-    # kmeans literal-argmin assign path (predict/cost read it directly):
-    "kmeans_predict",
-    "kmeans_cluster_cost",
-    # graph family: multi-assign rewrite + ACE partition assign:
-    "all_neighbors_graph",
-    "cagra_ace_graph",
-    # cosine per-side norm factorization (changes 8/12 — _knn_expr,
-    # maxsim, pairwise_distance):
-    "knn_bf_cosine",
-    "text_maxsim_topk",
-    "dedup_embedding_cosine",
-    "pairwise_cosine",
-    # bm25 join reorder + dl derivation + query-vocab semi-restrict
-    # (hybrid/borda compose the same bm25 ranking):
-    "text_bm25_topk",
-    "text_hybrid_rrf",
-    "text_rank_fusion_borda",
-    # connected-components one-join rounds + fused round 1, and the
-    # curate quality+language marking fusion (every curate variant
-    # composes both):
-    "dedup_connected_components",
-    "pipeline_curate_corpus",
-    "pipeline_curate_stats",
-    "pipeline_curate_novelty",
-    "pipeline_curate_gopher",
-    "pipeline_curate_gopher_rules",
-    "pipeline_curate_semantic",
-    # classify restaging (spread + tokenize staging order):
-    "text_classifier_score",
-    "text_chi2_terms",
-    "text_dsir_importance",
-    # Tier 5 — staleness: the OLDEST union row not already in-window
-    # (r08 head, sorted order); the rest of the r08/r09 tranche heads
-    # the r15 tier per CLAUDE.md.  (knn_bf_canberra was the second
-    # staleness slot until the pairwise_distance cosine factorization
-    # made pairwise_cosine a 46th re-gate.)
-    "knn_bf_braycurtis",
-]
-
-
-def _apply_window_order():
-    missing = [n for n in _WINDOW_PRIORITY if n not in QUERIES]
-    assert not missing, f"window-priority names not registered: {missing}"
-    snapshot = dict(QUERIES)
-    QUERIES.clear()
-    for n in _WINDOW_PRIORITY:
-        QUERIES[n] = snapshot[n]
-    for n, fn in snapshot.items():
-        QUERIES.setdefault(n, fn)
-
-
-_apply_window_order()

@@ -14,13 +14,16 @@ Spark design (SURVEY.md §2.5): the index IS a partitioning.
   the inverted file. Persisted ``partitionBy(list_id)`` so searches
   prune at the *file listing* level.
 * **search** — the reference's ``select_clusters`` + per-list scan.
-  ``method="blas"`` (alias ``"broadcast"``) is one pass: the query
-  batch (small by contract) comes to the driver, a NumPy kernel picks
-  each query's ``n_probes`` lists (``kmeans.coarse_probes`` — the same
-  rows and ties as the SQL fold), ``{list_id: (qids, Q)}`` is
-  broadcast, unprobed lists are filtered out before the scan, and each
-  partition of the inverted file GEMM-scores its own lists and keeps a
-  local top-k; the only shuffle is the ``n_parts × q × k`` merge.
+  ``method="blas"`` is one pass: the query batch (small by contract)
+  comes to the driver, a NumPy kernel picks each query's ``n_probes``
+  lists (``kmeans.coarse_probes`` — the same rows and ties as the SQL
+  fold), ``{list_id: (qids, Q)}`` is broadcast, unprobed lists are
+  filtered out before the scan, and each partition of the inverted
+  file GEMM-scores its own lists and keeps a local top-k; the only
+  shuffle is the ``n_parts × q × k`` merge. That scan,
+  :func:`_probe_scan`, is the one ``blas`` kernel of every IVF variant
+  (IVF-PQ, IVF-SQ, RaBitQ, ScaNN reorder); each brings only its
+  per-list ``score``.
   ``method="expr"`` (oracle-exact) runs the coarse stage as a map-only
   SQL fold and broadcast-joins the probe set against the inverted
   file, so the dataset side never shuffles there either. At 1000
@@ -108,8 +111,7 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
     picks each query's lists, and one map pass over the inverted file
     GEMM-scores every probed list against exactly the queries probing
     it, keeping a local top-k before the single merge shuffle — see
-    :func:`_probe_scan`. ``method="broadcast"`` is an alias of
-    ``"blas"``."""
+    :func:`_probe_scan`."""
     metric = metric or index.metric
     # bitset-filter analog (filters.pyx works across index types): a
     # boolean Column over the inverted file (id / list_id / vec),
@@ -118,15 +120,18 @@ def ivf_flat_search(index: IVFFlatIndex, queries: DataFrame, k: int = 10,
     lists = index.lists if prefilter is None else index.lists.filter(prefilter)
     q = queries.select(F.col(qid_col).cast("long").alias("qid"),
                        F.col(qvec_col).alias("_qv"))
-    if method in ("blas", "broadcast"):
+    if method == "blas":
         from cuvs_spark.operators.brute_force import _pairwise_np
+        from cuvs_spark.operators.select_k import knn_merge_parts
         qids, Q = _query_matrix(q, index.centroids.shape[1], "ivf_flat_search")
 
         def score(_, lid, X, Q):
             return _pairwise_np(Q, X.astype(np.float64), metric)
 
-        return _probe_scan(lists, "vec", index.centroids, qids, Q, n_probes,
-                           k, is_min_close(metric), score)
+        minimize = is_min_close(metric)
+        local = _probe_scan(lists, "vec", index.centroids, qids, Q, n_probes,
+                            k, minimize, score)
+        return knn_merge_parts(local, k, select_min=minimize)
     from cuvs_spark.plans.layout import spread_narrow
     # r14: the coarse literal fold is per-QUERY heavy compute — spread a
     # narrow query batch over the cores (no-op when already split)
@@ -183,9 +188,10 @@ def vec_matrix(ids: np.ndarray, vecs, dim: int, op: str) -> np.ndarray:
 def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
                 qids: np.ndarray, Q: np.ndarray, n_probes: int, k: int,
                 minimize: bool, score, consts=None) -> DataFrame:
-    """One pass over an IVF table ``(id, list_id, <payload>)`` →
-    ``(qid, nid, distance, rank)`` — the reference's
-    ``select_clusters`` + per-list scan (``ivf_flat_search.cuh:41``).
+    """One pass over an IVF table ``(id, list_id, <payload>)`` → local
+    top-k rows ``(qid, nid, distance)`` — the reference's
+    ``select_clusters`` + per-list scan (``ivf_flat_search.cuh:41``),
+    shared by the ``blas`` search of every IVF variant.
 
     The driver computes every query's probes (:func:`coarse_probes`,
     the same rows as the SQL fold), groups them into ``{list_id:
@@ -193,15 +199,16 @@ def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
     of the table then scores its own probed lists in place —
     ``score(consts, list_id, P, Q)`` returns the ``(len(Q), len(P))``
     distance tile for the list's stacked payload rows ``P`` — and
-    emits each list's local top-k (the merge's partial
-    ``WindowGroupLimit`` then keeps k rows per query per partition).
-    Unprobed lists are filtered out before the scan (file-level pruning
-    on a ``partitionBy(list_id)`` table); the table never shuffles, and
-    the only exchange is the ``n_parts × q × k`` ``knn_merge_parts``."""
+    emits each list's local top-k. Unprobed lists are filtered out
+    before the scan (file-level pruning on a ``partitionBy(list_id)``
+    table); the table never shuffles. The caller merges with
+    ``knn_merge_parts`` (whose partial ``WindowGroupLimit`` keeps k
+    rows per query per partition), so the only exchange is that
+    ``n_parts × q × k`` merge — or, where one id sits in several lists
+    (ScaNN's SOAR spill), a per-(qid, id) collapse before it."""
     import pandas as pd
 
     from cuvs_spark.cluster.kmeans import coarse_probes
-    from cuvs_spark.operators.select_k import knn_merge_parts
 
     probes = coarse_probes(Q, centroids, n_probes)
     flat = probes.ravel()
@@ -238,9 +245,8 @@ def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
 
     if len(by_list) < len(centroids):
         table = table.filter(F.col("list_id").isin(list(by_list)))
-    local = table.select("list_id", "id", payload).mapInPandas(
+    return table.select("list_id", "id", payload).mapInPandas(
         scan, "qid long, nid long, distance double")
-    return knn_merge_parts(local, k, select_min=minimize)
 
 
 def ivf_flat_extend(index: IVFFlatIndex, new_rows: DataFrame, *,

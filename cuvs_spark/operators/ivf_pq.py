@@ -29,15 +29,18 @@ Spark design:
   (sub, code); summing subdists per (qid, id) IS the LUT lookup
   accumulation, with map-side combine. The per-(qid,id) partials are
   folded in subspace order (sorted-array fold) so results are
-  deterministic and oracle-exact. ``method="blas"`` (alias
-  ``"broadcast"``) is the single-pass throughput path shared with
-  IVF-Flat: driver-side probes, the query batch broadcast per list,
-  each codes partition LUT-scores its own lists in NumPy; the codes
-  table never shuffles and the codebook array is collected once per
-  index.
+  deterministic and oracle-exact. ``method="blas"`` is the
+  single-pass throughput path shared with IVF-Flat
+  (``ivf_flat._probe_scan``): driver-side probes, the query batch
+  broadcast per list, each codes partition LUT-scores its own lists in
+  NumPy; the codes table never shuffles and the codebook array is
+  collected once per index.
 * **SQ search** — decode is a closed-form expression
-  (``center + lo + (code+128)·step``), distance runs on the decoded
-  array; everything stays in whole-stage codegen.
+  (``center + lo + (code+128)·step``) against the float32-narrowed
+  centre the build encoded with; ``method="expr"`` scores the decoded
+  array in whole-stage codegen (oracle path), ``method="blas"`` decodes
+  each probed list to a NumPy block inside the one-pass scan shared
+  with IVF-Flat and IVF-PQ (``ivf_flat._probe_scan``).
 * **directional** (since r12): IVF-SQ takes any metric (decode is
   metric-agnostic); IVF-PQ covers the reference's full metric surface
   (sqeuclidean / euclidean / inner_product / cosine,
@@ -353,7 +356,7 @@ def ivf_pq_transform(index: IVFPQIndex, dataset: DataFrame, *,
 
 
 def _pq_lut_score(Q, C, CB, cent_vec, rot, metric):
-    """Per-list LUT scoring shared by the blas/broadcast paths →
+    """Per-list LUT scoring of the blas path →
     the (p, m) score matrix for queries ``Q`` against the list's code
     matrix ``C``. L2 family: the reference LUT (shift the query by the
     list center for residual encoding, then per-subspace squared
@@ -404,8 +407,7 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
     own lists' code matrices by fancy-indexed LUT gather and keeps a
     local top-k before the merge. The codes table never shuffles; no
     per-(row, subspace) explosion, no LUT join relation, and the
-    codebook comes from :attr:`IVFPQIndex.codebook_array`.
-    ``method="broadcast"`` is an alias of ``"blas"``."""
+    codebook comes from :attr:`IVFPQIndex.codebook_array`."""
     from cuvs_spark.functions.distance import is_min_close
     metric = _pq_metric(index.metric)
     minimize = is_min_close(metric)
@@ -420,8 +422,9 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
         from cuvs_spark.functions.vector import l2_normalize
         q = q.withColumn("_qv", l2_normalize("_qv"))
     residual = index.encode == "residual"
-    if method in ("blas", "broadcast"):
+    if method == "blas":
         from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
+        from cuvs_spark.operators.select_k import knn_merge_parts
         qids, Q = _query_matrix(q, index.centroids.shape[1], "ivf_pq_search")
         # residuals were encoded against the float32-narrowed centres
         cent = (index.centroids.astype(np.float32).astype(np.float64)
@@ -437,9 +440,10 @@ def ivf_pq_search(index: IVFPQIndex, queries: DataFrame, k: int = 10,
                                  cent[lid] if cent is not None else None,
                                  rot, metric)
 
-        return _probe_scan(codes_t, "codes", index.centroids, qids, Q,
-                           n_probes, k, minimize, score,
-                           (index.codebook_array, cent, index.rotation))
+        local = _probe_scan(codes_t, "codes", index.centroids, qids, Q,
+                            n_probes, k, minimize, score,
+                            (index.codebook_array, cent, index.rotation))
+        return knn_merge_parts(local, k, select_min=minimize)
     from cuvs_spark.plans.layout import spread_narrow
     q = spread_narrow(q, "qid")
     # r14: coarse probes as a map-only literal slice (guide §2.4) —
@@ -826,64 +830,43 @@ def ivf_sq_search(index: IVFSQIndex, queries: DataFrame, k: int = 10,
     vectors → top-k.
 
     ``method="expr"`` decodes+scores in JVM expressions (oracle path);
-    ``method="blas"`` cogroups each list with its probing queries —
-    int8 codes decode to a NumPy block (center + lo + (q+128)·step) and
-    score via one GEMM tile with local top-k (the throughput fine
-    stage, same shape as ivf_flat's). Directional: every local top-k
-    and the merge follow ``is_min_close(index.metric)``."""
+    ``method="blas"`` is the one-pass scan shared with IVF-Flat
+    (``ivf_flat._probe_scan``): each probed list's int8 codes decode to
+    a NumPy block against the float32-narrowed centre the build encoded
+    with (``center + lo + (q+128)·step``, the expr decode's arithmetic)
+    and score via one GEMM tile with a local top-k. Directional: every
+    local top-k and the merge follow ``is_min_close(index.metric)``."""
     from cuvs_spark.functions.distance import is_min_close
     minimize = is_min_close(index.metric)
-    spark = queries.sparkSession
+    q = queries.select(F.col(qid_col).cast("long").alias("qid"),
+                       F.col(qvec_col).alias("_qv"))
+    if method == "blas":
+        from cuvs_spark.operators.brute_force import _pairwise_np
+        from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
+        from cuvs_spark.operators.select_k import knn_merge_parts
+
+        C32 = np.asarray(index.centroids, np.float32).astype(np.float64)
+        qids, Q = _query_matrix(q, C32.shape[1], "ivf_sq_search")
+        lo, hi, metric = index.lo, index.hi, index.metric
+
+        def score(C32, lid, codes, Q):
+            X = C32[lid] + lo + (codes + 128.0) * (hi - lo) / 255.0
+            return _pairwise_np(Q, X, metric)
+
+        local = _probe_scan(index.rcodes, "rcodes", index.centroids, qids, Q,
+                            n_probes, k, minimize, score, C32)
+        return knn_merge_parts(local, k, select_min=minimize)
     from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
+    q = spread_narrow(q, "qid")
     # r14: map-only literal coarse stage; the probed list's centroid
-    # rides along so the expr fine stage below decodes without a
-    # centroid join. r15: the query vector rides along too — no
-    # probes ⋈ q join-back in either fine stage (same rows/values).
+    # rides along so the fine stage decodes without a centroid join.
+    # r15: the query vector rides along too — no probes ⋈ q join-back.
     cs = coarse_sorted_sql("_qv", index.centroids)
     probes_cv = (q.select(
         "qid", "_qv",
         F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
         .select("qid", F.col("_s.l").alias("list_id"),
                 F.col("_s.cv").alias("_cent"), "_qv"))
-    if method == "blas":
-        import pandas as pd
-
-        from cuvs_spark.operators.brute_force import _pairwise_np
-        from cuvs_spark.operators.select_k import knn_merge_parts
-
-        C = index.centroids
-        lo, hi = index.lo, index.hi
-        bc = spark.sparkContext.broadcast((C, lo, hi, index.metric, k))
-        probing_q = probes_cv.select("list_id", "qid", "_qv")
-
-        def score(key, rows: pd.DataFrame, qpdf: pd.DataFrame):
-            if rows.empty or qpdf.empty:
-                return pd.DataFrame(columns=["qid", "nid", "distance"])
-            C, lo, hi, metric, k = bc.value
-            codes = np.vstack(rows["rcodes"].to_numpy()).astype(np.float64)
-            center = C[int(key[0])]
-            X = center[None, :] + lo + (codes + 128.0) * (hi - lo) / 255.0
-            ids = rows["id"].to_numpy().astype(np.int64)
-            Q = np.vstack(qpdf["_qv"].to_numpy()).astype(np.float64)
-            qids = qpdf["qid"].to_numpy().astype(np.int64)
-            D = _pairwise_np(Q, X, metric)
-            kk = min(k, D.shape[1])
-            part = np.argpartition(D if minimize else -D,
-                                   kk - 1, axis=1)[:, :kk]
-            return pd.DataFrame({
-                "qid": np.repeat(qids, kk),
-                "nid": np.take_along_axis(
-                    np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-        local = (index.rcodes.groupBy("list_id")
-                 .cogroup(probing_q.groupBy("list_id"))
-                 .applyInPandas(score,
-                                schema="qid long, nid long, distance double"))
-        return knn_merge_parts(local, k, select_min=minimize)
     dec = _sq_dec("rcodes", "_cent", index.lo, index.hi)
     fine = (index.rcodes.join(F.broadcast(probes_cv), "list_id")
             .select("qid", F.col("id").alias("nid"),

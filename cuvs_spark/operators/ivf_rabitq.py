@@ -29,6 +29,11 @@ here); the codes table partitions by ``list_id`` so probing prunes
 partitions exactly like IVF-Flat; per-row scalars (n2, vn2, ipr) are
 built once, and search touches only probed lists with a broadcast
 centroid/probe table — no shuffle of the codes table at query time.
+``score_method="blas"`` runs the same estimator inside the one-pass
+scan shared with the IVF family (``ivf_flat._probe_scan``): the codes
+and the per-row scalars ride as one payload array, each probed list
+computes its queries' ``qres``/``qn2`` (bit-identical to the SQL
+values, :func:`_query_residuals`) and scores them with one GEMM.
 """
 
 from __future__ import annotations
@@ -114,6 +119,19 @@ def _est(n2: str, qn2: str, vn2: str, ipr: str, ipq: str) -> str:
 
 
 _DOT = "{x} * {y}"
+
+
+def _query_residuals(Q: np.ndarray, c: np.ndarray):
+    """``(Q − c, ‖Q − c‖²)`` for a float64 query block and one
+    float32-narrowed centre — bit-identical to the search's SQL
+    ``qres`` (:func:`_res`) and ``qn2`` (the sqeuclidean fold): the
+    squared norm folds ``(x − y)²`` left to right, one dimension at a
+    time, from 0.0, as ``kmeans.coarse_probes`` does."""
+    R = Q - c[None, :]
+    n2 = np.zeros(len(Q))
+    for j in range(R.shape[1]):
+        n2 += R[:, j] * R[:, j]
+    return R, n2
 
 
 @dataclass
@@ -229,46 +247,30 @@ def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
     top-k -> ``(qid, nid, distance, rank)``; optionally re-rank a
     ``refine_k0`` shortlist exactly against ``refine_with`` (raw
     vectors), as the reference pairs RaBitQ with refinement."""
-    spark = queries.sparkSession
     B = index.bits_per_dim
-    from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
-    # r14: map-only literal coarse stage; the probed center rides
-    # along so qres/qn2 need no centroid join. r15: the query vector
-    # rides along too — qside is a pure projection, no probes ⋈ q
-    # join-back (same rows, same values by construction).
-    cs = coarse_sorted_sql("_qv", index.centroids)
-    probes_cv = (q.select(
-        "qid", "_qv",
-        F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
-        .select("qid", F.col("_s.l").cast("long").alias("list_id"),
-                F.col("_s.cv").alias("_cent"), "_qv"))
-    qside = probes_cv.select(
-        "qid", "list_id",
-        F.expr(_res("spark", "_qv", "_cent")).alias("qres"),
-        F.expr(distance_sql_spark("sqeuclidean", "_qv",
-                                  "_cent")).alias("qn2"))
+    k0 = refine_k0 if refine_with is not None else k
+    q = queries.select(F.col(qid_col).cast("long").alias("qid"),
+                       F.col(qvec_col).alias("_qv"))
     if score_method == "blas":
-        # cogrouped per list: decode the list's code matrix once, score
-        # every probing query against it with ONE GEMM (ipq = QR @ V.T),
-        # keep a local top-k, merge — no per-pair row materialization
-        import pandas as pd
+        # the one-pass scan shared with IVF-Flat: the codes and the
+        # per-row estimator scalars ride as one payload array, each
+        # probed list decodes once and scores its probing queries with
+        # ONE GEMM (ipq = QR @ V.T) and a local top-k
+        from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
+        from cuvs_spark.operators.select_k import knn_merge_parts
+        C32 = np.asarray(index.centroids, np.float32).astype(np.float64)
+        dim = C32.shape[1]
+        qids, Q = _query_matrix(q, dim, "ivf_rabitq_search")
         g = float(1 << B)
-        k0 = refine_k0 if refine_with is not None else k
+        table = index.codes.select(
+            "id", "list_id",
+            F.concat(F.col("codes").cast("array<double>"),
+                     F.array("n2", "vn2", "ipr")).alias("_p"))
 
-        def score(key, rows: pd.DataFrame, qp: pd.DataFrame):
-            if rows.empty or qp.empty:
-                return pd.DataFrame(columns=["qid", "nid", "distance"])
-            V = (2.0 * np.vstack(rows["codes"].to_numpy()) + 1.0 - g) / g
-            n2 = rows["n2"].to_numpy(float)
-            vn2 = rows["vn2"].to_numpy(float)
-            ipr = rows["ipr"].to_numpy(float)
-            ids = rows["id"].to_numpy(np.int64)
-            QR = np.vstack(qp["qres"].to_numpy()).astype(np.float64)
-            qn2 = qp["qn2"].to_numpy(float)
-            qids = qp["qid"].to_numpy(np.int64)
+        def score(C32, lid, P, Q):
+            V = (2.0 * P[:, :dim] + 1.0 - g) / g
+            n2, vn2, ipr = P[:, dim], P[:, dim + 1], P[:, dim + 2]
+            QR, qn2 = _query_residuals(Q, C32[lid])
             IPQ = QR @ V.T                      # (p, m)
             with np.errstate(divide="ignore", invalid="ignore"):
                 T = (IPQ / (np.sqrt(vn2)[None, :]
@@ -278,20 +280,29 @@ def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
             adj = np.where(bad, 0.0,
                            2.0 * np.sqrt(n2)[None, :]
                            * np.sqrt(qn2)[:, None] * T)
-            D = n2[None, :] + qn2[:, None] - adj
-            kk = min(k0, D.shape[1])
-            part = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-            return pd.DataFrame({
-                "qid": np.repeat(qids, kk),
-                "nid": np.take_along_axis(
-                    np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-                "distance": np.take_along_axis(D, part, axis=1).ravel()})
+            return n2[None, :] + qn2[:, None] - adj
 
-        scored = (index.codes.groupBy("list_id")
-                  .cogroup(qside.groupBy("list_id"))
-                  .applyInPandas(score,
-                                 "qid long, nid long, distance double"))
+        local = _probe_scan(table, "_p", index.centroids, qids, Q, n_probes,
+                            k0, True, score, C32)
+        short = knn_merge_parts(local, k0)
     else:
+        from cuvs_spark.plans.layout import spread_narrow
+        q = spread_narrow(q, "qid")
+        # r14: map-only literal coarse stage; the probed center rides
+        # along so qres/qn2 need no centroid join. r15: the query
+        # vector rides along too — qside is a pure projection, no
+        # probes ⋈ q join-back (same rows, same values by construction).
+        cs = coarse_sorted_sql("_qv", index.centroids)
+        probes_cv = (q.select(
+            "qid", "_qv",
+            F.explode(F.expr(f"slice({cs}, 1, {n_probes})")).alias("_s"))
+            .select("qid", F.col("_s.l").cast("long").alias("list_id"),
+                    F.col("_s.cv").alias("_cent"), "_qv"))
+        qside = probes_cv.select(
+            "qid", "list_id",
+            F.expr(_res("spark", "_qv", "_cent")).alias("qres"),
+            F.expr(distance_sql_spark("sqeuclidean", "_qv",
+                                      "_cent")).alias("qn2"))
         joined = index.codes.join(F.broadcast(qside), "list_id")
         scored = (joined
                   .withColumn("v", F.expr(_decode("spark", "codes", B)))
@@ -300,8 +311,7 @@ def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
                   .select("qid", F.col("id").alias("nid"),
                           F.expr(_est("n2", "qn2", "vn2", "ipr", "ipq"))
                           .alias("distance")))
-    k0 = refine_k0 if refine_with is not None else k
-    short = select_k(scored, "qid", "distance", k0, tie_cols=["nid"])
+        short = select_k(scored, "qid", "distance", k0, tie_cols=["nid"])
     if refine_with is None:
         return short
     from cuvs_spark.operators.pairwise import refine as exact_refine

@@ -25,7 +25,12 @@ oracle — no approximation in the gate.
 * ``method="reorder"`` — probe ``n_probes`` leaves per query, gather the
   spilled assignment table (each id sits in <= 2 leaves), dedupe, score
   raw vectors exactly (the reference's ``reordering_bf16`` tier with
-  full precision). Exact oracle.
+  full precision). Exact oracle. ``score_method="blas"`` runs the same
+  tier through the one-pass scan of the IVF family
+  (``ivf_flat._probe_scan``): driver-side probes, the query batch
+  broadcast per leaf, one GEMM tile + local top-k per probed leaf of
+  the ``(list_id, id, vec)`` relation, then a per-(query, id) minimum
+  collapses SOAR-spilled ids before the merge.
 * ``method="pq"`` — score *residual* PQ codes through a per-(query,
   leaf) lookup-table join, dedupe to the best leaf per (query, id).
   Deterministic subspace-ordered fold -> exact oracle too.
@@ -273,7 +278,7 @@ def scann_build(dataset: DataFrame, n_leaves: int = 32, *,
 
 def _probes(index: ScannIndex, q: DataFrame, n_probes: int) -> DataFrame:
     # r15: the query vector rides along through the probe explode so
-    # downstream stages (cogroup qside, pq residual) need no
+    # the pq residual stage needs no
     # probes ⋈ q join-back; consumers that only want (qid, list_id)
     # prune the column away at no cost.
     cs = coarse_sorted_sql("_qv", index.centroids)
@@ -283,83 +288,55 @@ def _probes(index: ScannIndex, q: DataFrame, n_probes: int) -> DataFrame:
         .select("qid", F.col("_s.l").cast("long").alias("list_id"), "_qv"))
 
 
-def _fine_blas(lists: DataFrame, probes: DataFrame, k: int,
-               metric: str) -> DataFrame:
-    """Cogrouped fine stage over the spilled lists: per list_id, (list
-    vectors) × (probing queries) → GEMM tile → local top-k; a vector
-    probed through several leaves collapses to its single exact
-    distance before the global knn_merge_parts. ``lists`` is any
-    ``(list_id, id, vec)`` relation, ``probes`` ``(qid, list_id,
-    _qv)``."""
-    import pandas as pd
-
-    from cuvs_spark.operators.brute_force import _pairwise_np
-    from cuvs_spark.operators.select_k import knn_merge_parts
-
-    minimize = is_min_close(metric)
-
-    def score(key, rows: pd.DataFrame, queries_pdf: pd.DataFrame):
-        if rows.empty or queries_pdf.empty:
-            return pd.DataFrame(columns=["qid", "nid", "distance"])
-        X = np.vstack(rows["vec"].to_numpy()).astype(np.float64)
-        ids = rows["id"].to_numpy().astype(np.int64)
-        Q = np.vstack(queries_pdf["_qv"].to_numpy()).astype(np.float64)
-        qids = queries_pdf["qid"].to_numpy().astype(np.int64)
-        D = _pairwise_np(Q, X, metric)
-        kk = min(k, D.shape[1])
-        part = (np.argpartition(D if minimize else -D, kk - 1, axis=1)
-                [:, :kk])
-        return pd.DataFrame({
-            "qid": np.repeat(qids, kk),
-            "nid": np.take_along_axis(
-                np.broadcast_to(ids, D.shape), part, axis=1).ravel(),
-            "distance": np.take_along_axis(D, part, axis=1).ravel()})
-
-    local = (lists.groupBy("list_id")
-             .cogroup(probes.select("list_id", "qid", "_qv")
-                      .groupBy("list_id"))
-             .applyInPandas(score, schema="qid long, nid long, distance double")
-             .groupBy("qid", "nid")
-             .agg(F.min("distance").alias("distance")))
-    return knn_merge_parts(local, k, select_min=minimize)
-
-
 def scann_search(index: ScannIndex, queries: DataFrame, k: int = 10,
                  n_probes: int = 8, *, qid_col: str = "qid",
                  qvec_col: str = "vec", method: str = "reorder",
                  score_method: str = "expr") -> DataFrame:
     """Probe leaves over the spilled assignment, score, top-k →
     ``(qid, nid, distance, rank)``. ``score_method="blas"`` scores the
-    reorder tier's candidate pairs with the vectorized row-wise kernel
-    (``score_pairs``) instead of the oracle-exact fold expression."""
+    reorder tier with the one-pass scan shared with the IVF family
+    (``ivf_flat._probe_scan``) instead of the oracle-exact fold
+    expression."""
     spark = queries.sparkSession
+    minimize = is_min_close(index.metric)
+    q = queries.select(F.col(qid_col).cast("long").alias("qid"),
+                       F.col(qvec_col).alias("_qv"))
+    if method == "reorder" and score_method == "blas":
+        from cuvs_spark.operators.brute_force import _pairwise_np
+        from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
+        from cuvs_spark.operators.select_k import knn_merge_parts
+        qids, Q = _query_matrix(q, index.centroids.shape[1], "scann_search")
+        metric = index.metric
+        # distinct (id, leaf): a vector whose SOAR leaf equals its
+        # primary leaf must not occupy two local top-k slots
+        lists = (index.assignments.select("id", "list_id").distinct()
+                 .join(index.vectors, "id"))
+
+        def score(_, lid, X, Q):
+            return _pairwise_np(Q, X.astype(np.float64), metric)
+
+        local = _probe_scan(lists, "vec", index.centroids, qids, Q, n_probes,
+                            k, minimize, score)
+        # a vector probed through both of its leaves scores identically:
+        # collapse it to one row before the merge
+        local = local.groupBy("qid", "nid").agg(
+            F.min("distance").alias("distance"))
+        return knn_merge_parts(local, k, select_min=minimize)
     from cuvs_spark.plans.layout import spread_narrow
-    q = spread_narrow(
-        queries.select(F.col(qid_col).cast("long").alias("qid"),
-                       F.col(qvec_col).alias("_qv")), "qid")
+    q = spread_narrow(q, "qid")
     probes = _probes(index, q, n_probes)
     if method == "reorder":
         cand = (index.assignments
                 .join(F.broadcast(probes.select("qid", "list_id")),
                       "list_id")
                 .select("qid", "id").distinct())
-        if score_method == "blas":
-            # cogrouped GEMM per leaf over the spilled lists; a vector
-            # probed through both of its leaves scores identically —
-            # _fine_blas collapses it before the merge
-            # distinct (id, leaf): a vector whose SOAR leaf equals its
-            # primary leaf must not occupy two local top-k slots
-            lists = (index.assignments.select("id", "list_id").distinct()
-                     .join(index.vectors, "id")
-                     .select("list_id", "id", "vec"))
-            return _fine_blas(lists, probes, k, index.metric)
         fdist = F.expr(distance_sql_spark(index.metric, "_qv", "vec"))
         pairs = (cand.join(index.vectors, "id")
                  .join(F.broadcast(q), "qid")
                  .select("qid", F.col("id").alias("nid"),
                          fdist.alias("distance")))
         return select_k(pairs, "qid", "distance", k, tie_cols=["nid"],
-                        select_min=is_min_close(index.metric))
+                        select_min=minimize)
     if method != "pq":
         raise ValueError(f"unknown scann search method {method!r}")
     if index.codes is None:

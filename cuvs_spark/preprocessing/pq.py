@@ -210,7 +210,10 @@ def pq_transform(df: DataFrame, book: PQCodebook | DataFrame, *,
     """
     if method == "blas":
         import pandas as pd
+
+        from cuvs_spark.operators.ivf_flat import vec_matrix
         CB = codebook_array(book)
+        S, _, w = CB.shape
         d = df.select(F.col(id_col).cast("long").alias("id"),
                       F.col(vec_col).alias("vec"))
 
@@ -218,7 +221,13 @@ def pq_transform(df: DataFrame, book: PQCodebook | DataFrame, *,
             for pdf in batches:
                 if pdf.empty:
                     continue
-                X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+                vecs = pdf["vec"].to_numpy()
+                # the batch's dim: its first vector's, when the
+                # floor-width subspaces fit it (remainder dims are
+                # sliced off, as in _subvecs), else the codebook's
+                n = next((len(v) for v in vecs if v is not None), S * w)
+                X = vec_matrix(pdf["id"].to_numpy(), vecs,
+                               n if n // S == w else S * w, "pq_transform")
                 yield pd.DataFrame({"id": pdf["id"],
                                     "codes": list(pq_codes(X, CB))})
 
@@ -284,6 +293,8 @@ def vpq_transform(df: DataFrame, quant: VPQQuantizer, *,
                   F.col(vec_col).alias("vec"))
     if method == "blas":
         import pandas as pd
+
+        from cuvs_spark.operators.ivf_flat import vec_matrix
         C = quant.vq_centroids
         CB = quant.pq.codebook
 
@@ -291,7 +302,8 @@ def vpq_transform(df: DataFrame, quant: VPQQuantizer, *,
             for pdf in batches:
                 if pdf.empty:
                     continue
-                X = np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+                X = vec_matrix(pdf["id"].to_numpy(), pdf["vec"].to_numpy(),
+                               C.shape[1], "vpq_transform")
                 lab = ((X[:, None, :] - C[None]) ** 2).sum(-1).argmin(1)
                 yield pd.DataFrame({"id": pdf["id"],
                                     "vq_label": lab.astype(np.int32),

@@ -4,9 +4,14 @@ query batch and one map pass over the inverted file.
 * the NumPy probe kernel must return exactly the rows of the SQL fold
   it replaces on the throughput path (same lists, same tie order, same
   float32-narrowed centroids);
-* the ``blas`` plans of IVF-Flat and IVF-PQ hold a single shuffle — the
-  top-k merge — and the index table feeds it only through the local
-  top-k;
+* the ``blas`` plans of IVF-Flat, IVF-PQ, IVF-SQ and RaBitQ hold a
+  single shuffle — the top-k merge — and the index table feeds it only
+  through the local top-k; ScaNN's reorder runs the same scan, with no
+  cogroup;
+* the IVF-SQ, RaBitQ and ScaNN reorder ``blas`` searches rank like
+  their ``expr`` oracle paths; IVF-SQ decodes against the same
+  float32-narrowed centres as the build, and RaBitQ's per-list query
+  residuals are bit-identical to the SQL values;
 * a repeat IVF-PQ search runs no codebook job;
 * a query of the wrong length fails before any job, naming both dims;
 * ``select_k``'s window strategy tolerates inputs that already carry
@@ -24,7 +29,12 @@ from pyspark.sql import functions as F
 
 from cuvs_spark.cluster.kmeans import coarse_probes, coarse_sorted_sql
 from cuvs_spark.operators.ivf_flat import ivf_flat_build, ivf_flat_search
-from cuvs_spark.operators.ivf_pq import ivf_pq_build, ivf_pq_search
+from cuvs_spark.operators.ivf_pq import (ivf_pq_build, ivf_pq_search,
+                                         ivf_sq_build, ivf_sq_search)
+from cuvs_spark.operators.ivf_rabitq import (_query_residuals, _res,
+                                             ivf_rabitq_build,
+                                             ivf_rabitq_search)
+from cuvs_spark.operators.scann import scann_build, scann_search
 from cuvs_spark.operators.select_k import select_k
 from cuvs_spark.plans.layout import count_exchanges, plan_string
 
@@ -97,7 +107,11 @@ def small_indexes(spark, vectors_df, tiny_vectors):
     pq = ivf_pq_build(vectors_df, 6, pq_dim=2, pq_bits=4, centroids=cents,
                       encode="residual", method="blas", seed=3)
     pq = replace(pq, codes=pq.codes.localCheckpoint())
-    return flat, pq
+    sq = ivf_sq_build(vectors_df, 6, centroids=cents)
+    sq = replace(sq, rcodes=sq.rcodes.localCheckpoint())
+    rq = ivf_rabitq_build(vectors_df, 6, centroids=cents)
+    rq = replace(rq, codes=rq.codes.localCheckpoint())
+    return flat, pq, sq, rq
 
 
 def _assert_one_pass_plan(df):
@@ -111,17 +125,101 @@ def _assert_one_pass_plan(df):
 
 
 def test_flat_blas_plan_is_one_pass(spark, small_indexes, queries_df):
-    flat, _ = small_indexes
-    for method in ("blas", "broadcast"):
-        _assert_one_pass_plan(ivf_flat_search(flat, queries_df, 5, 3,
-                                              method=method))
+    flat = small_indexes[0]
+    _assert_one_pass_plan(ivf_flat_search(flat, queries_df, 5, 3,
+                                          method="blas"))
 
 
 def test_pq_blas_plan_is_one_pass(spark, small_indexes, queries_df):
-    _, pq = small_indexes
-    for method in ("blas", "broadcast"):
-        _assert_one_pass_plan(ivf_pq_search(pq, queries_df, 5, 3,
-                                            method=method))
+    pq = small_indexes[1]
+    _assert_one_pass_plan(ivf_pq_search(pq, queries_df, 5, 3,
+                                        method="blas"))
+
+
+def test_sq_blas_plan_is_one_pass(spark, small_indexes, queries_df):
+    sq = small_indexes[2]
+    _assert_one_pass_plan(ivf_sq_search(sq, queries_df, 5, 3,
+                                        method="blas"))
+
+
+def test_rabitq_blas_plan_is_one_pass(spark, small_indexes, queries_df):
+    rq = small_indexes[3]
+    _assert_one_pass_plan(ivf_rabitq_search(rq, queries_df, 5, 3,
+                                            score_method="blas"))
+
+
+@pytest.fixture(scope="module")
+def scann_index(spark, vectors_df, tiny_vectors):
+    return scann_build(vectors_df, 6, centroids=tiny_vectors[:6])
+
+
+def test_scann_reorder_blas_scans_without_cogroup(spark, scann_index,
+                                                  queries_df):
+    plan = plan_string(scann_search(scann_index, queries_df, 5, 3,
+                                    score_method="blas"))
+    assert "MapInPandas" in plan, plan
+    assert "CoGroup" not in plan, plan
+
+
+def _ranks(df):
+    return sorted(map(tuple, df.select("qid", "nid", "rank").collect()))
+
+
+def test_rabitq_blas_ranks_like_expr(spark, small_indexes, vectors_df,
+                                    queries_df):
+    rq = small_indexes[3]
+    for kw in ({}, dict(refine_with=vectors_df, refine_k0=12)):
+        want = _ranks(ivf_rabitq_search(rq, queries_df, 5, 3, **kw))
+        got = _ranks(ivf_rabitq_search(rq, queries_df, 5, 3,
+                                       score_method="blas", **kw))
+        assert got == want
+
+
+def test_scann_reorder_blas_ranks_like_expr(spark, scann_index,
+                                            queries_df):
+    want = _ranks(scann_search(scann_index, queries_df, 5, 3))
+    got = _ranks(scann_search(scann_index, queries_df, 5, 3,
+                              score_method="blas"))
+    assert got == want
+    assert len(got) == 12 * 5
+
+
+def test_sq_blas_decodes_against_float32_centres(spark, vectors_df,
+                                                 queries_df, tiny_vectors):
+    # centres that float32 does not represent: the build encodes, and
+    # the expr search decodes, against their float32 narrowing
+    cents = tiny_vectors[:6].astype(np.float64) / 3
+    sq = ivf_sq_build(vectors_df, 6, centroids=cents)
+    want = sorted(map(tuple, ivf_sq_search(sq, queries_df, 5, 3).collect()))
+    got = sorted(map(tuple, ivf_sq_search(sq, queries_df, 5, 3,
+                                          method="blas").collect()))
+    assert [(g[0], g[1], g[3]) for g in got] == \
+        [(w[0], w[1], w[3]) for w in want]
+    np.testing.assert_allclose([g[2] for g in got], [w[2] for w in want],
+                               rtol=1e-12, atol=0)
+
+
+def test_rabitq_query_residuals_match_sql(spark, tiny_queries, tiny_vectors):
+    from cuvs_spark.functions.distance import distance_sql_spark
+    C = tiny_vectors[:6].astype(np.float64) / 3
+    q = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(tiny_queries)],
+        "qid long, _qv array<float>")
+    cs = coarse_sorted_sql("_qv", C)
+    rows = (q.select("qid", "_qv", F.explode(F.expr(
+        f"slice({cs}, 1, 6)")).alias("_s"))
+        .select("qid", F.col("_s.l").alias("l"),
+                F.expr(_res("spark", "_qv", "_s.cv")).alias("qres"),
+                F.expr(distance_sql_spark("sqeuclidean", "_qv", "_s.cv"))
+                .alias("qn2"))
+        .collect())
+    assert len(rows) == len(tiny_queries) * 6
+    Q = tiny_queries.astype(np.float64)
+    C32 = C.astype(np.float32).astype(np.float64)
+    for r in rows:
+        R, n2 = _query_residuals(Q[[r["qid"]]], C32[r["l"]])
+        assert R[0].tolist() == r["qres"]
+        assert n2[0] == r["qn2"]
 
 
 def _jobs_run_by(spark, fn) -> int:
@@ -138,7 +236,7 @@ def _jobs_run_by(spark, fn) -> int:
 def test_repeat_pq_search_runs_no_codebook_job(spark, small_indexes,
                                                queries_df, tmp_path):
     from cuvs_spark.sources import load_ivf_pq, save_ivf_pq
-    _, pq = small_indexes
+    pq = small_indexes[1]
     # a stored index: its codebook table is a parquet scan, so reading
     # it is a real job (a driver-built one would be a local relation)
     save_ivf_pq(pq, str(tmp_path / "pq"))
@@ -153,15 +251,25 @@ def test_repeat_pq_search_runs_no_codebook_job(spark, small_indexes,
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-@pytest.mark.parametrize("which", ["ivf_flat", "ivf_pq"])
-def test_query_dim_mismatch_names_both_dims(spark, small_indexes, which):
-    flat, pq = small_indexes
+@pytest.mark.parametrize("which", ["ivf_flat", "ivf_pq", "ivf_sq",
+                                   "ivf_rabitq", "scann"])
+def test_query_dim_mismatch_names_both_dims(spark, small_indexes,
+                                            scann_index, which):
+    flat, pq, sq, rq = small_indexes
     bad = spark.createDataFrame([(0, [0.1, 0.2, 0.3])],
                                 "qid long, vec array<float>")
-    search = (ivf_flat_search if which == "ivf_flat" else ivf_pq_search)
-    index = flat if which == "ivf_flat" else pq
-    with pytest.raises(ValueError, match=r"3 dims.*index has 8"):
-        search(index, bad, 5, 3, method="blas")
+    search = {
+        "ivf_flat": lambda: ivf_flat_search(flat, bad, 5, 3, method="blas"),
+        "ivf_pq": lambda: ivf_pq_search(pq, bad, 5, 3, method="blas"),
+        "ivf_sq": lambda: ivf_sq_search(sq, bad, 5, 3, method="blas"),
+        "ivf_rabitq": lambda: ivf_rabitq_search(rq, bad, 5, 3,
+                                                score_method="blas"),
+        "scann": lambda: scann_search(scann_index, bad, 5, 3,
+                                      score_method="blas"),
+    }[which]
+    with pytest.raises(ValueError,
+                       match=rf"{which}_search: .*3 dims.*index has 8"):
+        search()
 
 
 def test_select_k_window_input_has_temp_column(spark):

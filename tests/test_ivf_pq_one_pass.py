@@ -10,7 +10,8 @@ shifts, rotates and encodes every row.
 * ``codebook_array`` is the collected ``codebook_df``, the trained one
   equals a NumPy reference, and it survives ``ivf_pq_extend``;
 * a null or wrong-length vector fails with a ``ValueError`` naming the
-  row id, on the driver sample and in the workers;
+  row id, on the driver sample and in the workers, and a null vector
+  does so in ``pq_transform``/``vpq_transform``'s blas encode too;
 * the blas search shifts queries by the float32-narrowed centres the
   codes were encoded against.
 """
@@ -178,6 +179,22 @@ def test_bad_vector_names_the_row(spark, tiny_vectors, cents, book, kind):
     idx = ivf_pq_build(df, N_LISTS, PQ_DIM, PQ_BITS, codebook=book, **kw)
     with pytest.raises(Exception, match=f"ValueError: {msg}"):
         idx.codes.collect()
+
+
+@pytest.mark.parametrize("which", ["pq_transform", "vpq_transform"])
+def test_transform_null_vector_names_the_row(spark, tiny_vectors, cents,
+                                             book, which):
+    from cuvs_spark.preprocessing.pq import (VPQQuantizer, pq_transform,
+                                             vpq_transform)
+    df = _bad_rows(spark, tiny_vectors[:20], "null")
+    if which == "pq_transform":
+        out = pq_transform(df, book, method="blas")
+    else:
+        out = vpq_transform(df, VPQQuantizer(cents, book), method="blas")
+    msg = (f"ValueError: {which}: id 7 has a null vector but the index "
+           "has 8 dims")
+    with pytest.raises(Exception, match=msg):
+        out.collect()
 
 
 def test_blas_search_shifts_by_float32_centres(spark, vectors_df,

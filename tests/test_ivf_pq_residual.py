@@ -155,15 +155,15 @@ def test_sq_extend_matches_union_build(data):
 
 
 def test_broadcast_path_agrees_with_cogroup(spark, vectors_df, queries_df):
-    """method='broadcast' (codes never shuffle — the 100 TB shape) must
-    rank-match the cogroup BLAS path and the expr oracle path."""
+    """The one-pass ``blas`` search (codes never shuffle — the 100 TB
+    shape) must rank-match the expr oracle path."""
     from cuvs_spark.operators.ivf_pq import ivf_pq_build, ivf_pq_search
     idx = ivf_pq_build(vectors_df, 8, pq_dim=4, pq_bits=4,
                        encode="residual")
     outs = {}
-    for m in ("expr", "blas", "broadcast"):
+    for m in ("expr", "blas"):
         outs[m] = sorted(
             (r["qid"], r["rank"], r["nid"])
             for r in ivf_pq_search(idx, queries_df, 5, 4,
                                    method=m).collect())
-    assert outs["expr"] == outs["blas"] == outs["broadcast"]
+    assert outs["expr"] == outs["blas"]

@@ -170,17 +170,17 @@ def test_kmeans_balanced_caps_list_sizes_larger_n(spark):
 
 
 def test_ivf_flat_broadcast_path_agrees(spark, vectors_df, queries_df):
-    """method='broadcast' (inverted file never shuffles) must rank-match
-    the expr and cogroup paths."""
+    """The one-pass ``blas`` search (inverted file never shuffles) must
+    rank-match the expr path."""
     from cuvs_spark.operators.ivf_flat import ivf_flat_build, ivf_flat_search
     idx = ivf_flat_build(vectors_df, 8, kmeans_n_iters=4)
     outs = {}
-    for m in ("expr", "blas", "broadcast"):
+    for m in ("expr", "blas"):
         outs[m] = sorted(
             (r["qid"], r["rank"], r["nid"])
             for r in ivf_flat_search(idx, queries_df, 5, 4,
                                      method=m).collect())
-    assert outs["expr"] == outs["blas"] == outs["broadcast"]
+    assert outs["expr"] == outs["blas"]
 
 
 def test_ivf_prefilter_all_methods(spark, vectors_df, queries_df):
@@ -193,15 +193,15 @@ def test_ivf_prefilter_all_methods(spark, vectors_df, queries_df):
     pred = F.col("id") % 3 != 0
     idx = ivf_flat_build(vectors_df, 8, kmeans_n_iters=4)
     outs = {}
-    for m in ("expr", "blas", "broadcast"):
+    for m in ("expr", "blas"):
         rows = ivf_flat_search(idx, queries_df, 5, 8, method=m,
                                prefilter=pred).collect()
         assert rows and all(r["nid"] % 3 != 0 for r in rows)
         outs[m] = sorted((r["qid"], r["rank"], r["nid"]) for r in rows)
-    assert outs["expr"] == outs["blas"] == outs["broadcast"]
+    assert outs["expr"] == outs["blas"]
 
     pq = ivf_pq_build(vectors_df, 8, pq_dim=4, pq_bits=4)
-    for m in ("expr", "blas", "broadcast"):
+    for m in ("expr", "blas"):
         rows = ivf_pq_search(pq, queries_df, 5, 8, method=m,
                              prefilter=pred).collect()
         assert rows and all(r["nid"] % 3 != 0 for r in rows)

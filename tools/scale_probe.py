@@ -7,10 +7,12 @@ dir (``$TMPDIR``, default /tmp).
 Usage: python tools/scale_probe.py [n_rows] [dim] [n_queries] [sections]
 
 ``sections`` is an optional comma-separated filter (knn, ivf, vamana, scann,
-rabitq, ivf_pq, lsh, directional, spectral, cagra) — e.g.
+rabitq, ivf_sq, ivf_pq, lsh, directional, spectral, cagra) — e.g.
 ``... 1000000 64 1000 lsh`` runs only the LSH-vs-exact crossover at 1M
 rows; ``directional`` probes the r12 max-close paths (inner_product
-IVF-SQ + all_neighbors).
+IVF-SQ + all_neighbors). The scann, rabitq, ivf_sq and ivf_pq sections
+also print ``<key>_jobs_stages``: the Spark jobs and stages each timed
+call ran.
 """
 
 from __future__ import annotations
@@ -70,6 +72,27 @@ def main() -> None:
          .select(F.col("id").alias("qid"), F.col("vec").alias("qv")))
 
     out = {}
+    sc = spark.sparkContext
+
+    def timed(key, fn):
+        """Run ``fn``; record its wall time and the jobs/stages it ran."""
+        group = f"scale_probe-{key}"
+        sc.setJobGroup(group, key)
+        t0 = time.time()
+        try:
+            res = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out[f"{key}_sec"] = round(time.time() - t0, 2)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        out[f"{key}_jobs_stages"] = [
+            len(jobs), sum(len(st.getJobInfo(j).stageIds) for j in jobs)]
+        return res
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
     if want("knn"):
         t0 = time.time()
         knn(d, q, 10, "euclidean", qvec_col="qv", method="blas") \
@@ -108,71 +131,59 @@ def main() -> None:
         g.write.format("noop").mode("overwrite").save()
         out["vamana_build_sec"] = round(time.time() - t0, 2)
 
-    if want("scann") or want("rabitq") or want("ivf_pq"):
-        # shared fixed centroids for the three coarse-quantized families
-        import numpy as np_
-        cents = np_.array(
+    if want("scann") or want("rabitq") or want("ivf_sq") or want("ivf_pq"):
+        # shared fixed centroids for the coarse-quantized families
+        cents = np.array(
             [r["vec"] for r in d.filter(F.col("id") < 128).collect()],
             dtype=float)
+
+    def built(index, table):
+        # materialize the index table inside the timed build call
+        getattr(index, table).cache().count()
+        return index
 
     if want("scann"):
         # ScaNN: SOAR build (spilled assignment) + reorder search
         from cuvs_spark.operators.scann import scann_build, scann_search
-        t0 = time.time()
-        sidx = scann_build(d, 128, centroids=cents, method="blas")
-        sidx.assignments.cache().count()
-        out["scann_build_sec"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        scann_search(sidx, q, 10, 8, qvec_col="qv", score_method="blas") \
-            .write.format("noop").mode("overwrite").save()
-        out["scann_search_sec"] = round(time.time() - t0, 2)
+        sidx = timed("scann_build", lambda: built(scann_build(
+            d, 128, centroids=cents, method="blas"), "assignments"))
+        for key in ("scann_search", "scann_search_warm"):
+            timed(key, lambda: noop(scann_search(
+                sidx, q, 10, 8, qvec_col="qv", score_method="blas")))
 
     if want("rabitq"):
         # IVF-RaBitQ: 3-bit codes build + estimator search
         from cuvs_spark.operators.ivf_rabitq import (ivf_rabitq_build,
                                                      ivf_rabitq_search)
-        t0 = time.time()
-        ridx = ivf_rabitq_build(d, 128, bits_per_dim=3, centroids=cents,
-                                assign_method="blas")
-        ridx.codes.cache().count()
-        out["rabitq_build_sec"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        ivf_rabitq_search(ridx, q, 10, 8, qvec_col="qv",
-                          score_method="blas") \
-            .write.format("noop").mode("overwrite").save()
-        out["rabitq_search_sec"] = round(time.time() - t0, 2)
+        ridx = timed("rabitq_build", lambda: built(ivf_rabitq_build(
+            d, 128, bits_per_dim=3, centroids=cents, assign_method="blas"),
+            "codes"))
+        for key in ("rabitq_search", "rabitq_search_warm"):
+            timed(key, lambda: noop(ivf_rabitq_search(
+                ridx, q, 10, 8, qvec_col="qv", score_method="blas")))
+
+    if want("ivf_sq"):
+        # IVF-SQ: int8 residual build + one-pass decode-and-score search
+        from cuvs_spark.operators.ivf_pq import ivf_sq_build, ivf_sq_search
+
+        sqidx = timed("ivf_sq_build", lambda: built(ivf_sq_build(
+            d, 128, centroids=cents, lo=-4.0, hi=4.0), "rcodes"))
+        for key in ("ivf_sq_search", "ivf_sq_search_warm"):
+            timed(key, lambda: noop(ivf_sq_search(
+                sqidx, q, 10, 8, qvec_col="qv", method="blas")))
 
     if want("ivf_pq"):
         # IVF-PQ: blas encode builds (raw, and residual in the
-        # benchmark's shape) + one-pass LUT search; each timed call
-        # also records the Spark jobs and stages it ran
+        # benchmark's shape) + one-pass LUT search
         from cuvs_spark.operators.ivf_pq import ivf_pq_build, ivf_pq_search
-        sc = spark.sparkContext
-
-        def timed(key, fn):
-            group = f"scale_probe-{key}"
-            sc.setJobGroup(group, key)
-            t0 = time.time()
-            try:
-                res = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            out[f"{key}_sec"] = round(time.time() - t0, 2)
-            st = sc.statusTracker()
-            jobs = st.getJobIdsForGroup(group)
-            out[f"{key}_jobs_stages"] = [
-                len(jobs), sum(len(st.getJobInfo(j).stageIds) for j in jobs)]
-            return res
 
         def build(encode, pq_dim, pq_bits):
-            pidx = ivf_pq_build(d, 128, pq_dim, pq_bits, centroids=cents,
-                                encode=encode, method="blas")
-            pidx.codes.cache().count()
-            return pidx
+            return built(ivf_pq_build(d, 128, pq_dim, pq_bits,
+                                      centroids=cents, encode=encode,
+                                      method="blas"), "codes")
 
         def search():
-            ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas") \
-                .write.format("noop").mode("overwrite").save()
+            noop(ivf_pq_search(pidx, q, 10, 8, qvec_col="qv", method="blas"))
 
         pidx = timed("ivf_pq_build", lambda: build("raw", 8, 4))
         rix = timed("ivf_pq_build_residual", lambda: build("residual", 16, 5))
@@ -206,7 +217,7 @@ def main() -> None:
     if want("directional"):
         # r12: the flipped max-close paths at probe scale — the
         # directional parameterization must not change the plan shapes
-        # (same GEMM cogroup / same bounded merge), so inner_product
+        # (same one-pass scan / same bounded merge), so inner_product
         # runs should track their sqeuclidean siblings' times.
         from cuvs_spark.operators.graph import all_neighbors_build
         from cuvs_spark.operators.ivf_pq import ivf_sq_build, ivf_sq_search
@@ -236,7 +247,7 @@ def main() -> None:
         # tiered_search_ip proves correctness at sf0.01; this bounds
         # the serving shape at 200k: IVF tier + 10%-of-corpus delta,
         # cross-tier knn_merge_parts in the max-close direction — one
-        # blas cogroup + one broadcast-query delta scan + the bounded
+        # blas scan + one broadcast-query delta scan + the bounded
         # n_parts×q×k merge, same plan family as the min-close twin)
         from functools import partial
 
@@ -264,7 +275,7 @@ def main() -> None:
         # composite_search_ip proves correctness at sf0.01; this
         # bounds the multi-sub-index serving shape at 200k: two
         # half-corpus IVF sub-indexes searched independently — two
-        # blas cogroups over half the rows each — plus the bounded
+        # one-pass blas scans over half the rows each — plus the bounded
         # n_parts×q×k knn_merge_parts merge; total work ≈ one
         # full-corpus IVF search split across two indexes, so it
         # should track the single-index ivf_sq/tiered entries with
