@@ -29,8 +29,12 @@ Spark design (SURVEY.md §2.5): the index IS a partitioning.
   file, so the dataset side never shuffles there either. At 1000
   executors the scan reads ``n_probes / n_lists`` of the data — same
   asymptotic win as the GPU.
-* **extend** — append + assign to nearest existing center
-  (``ivf_flat.pyx:467``): a union plus one broadcast join.
+* **extend** — assign each new row to its nearest existing center and
+  append it (``ivf_flat.pyx:467``). Like the reference's, the extended
+  index owns its storage: the old table plus the new rows, materialized
+  once in the old table's partition count (:func:`_extended_table`),
+  so a search after an extend costs what it costs on a fresh build.
+  Spark frees that table once no index object references it.
 """
 
 from __future__ import annotations
@@ -63,10 +67,16 @@ def ivf_flat_build(dataset: DataFrame, n_lists: int = 64, *,
                    id_col: str = "id", vec_col: str = "vec",
                    centroids: np.ndarray | None = None,
                    add_data_on_build: bool = True) -> IVFFlatIndex:
-    """Train the coarse quantizer and materialize the inverted file.
+    """Train the coarse quantizer and define the inverted file.
 
     ``centroids`` short-circuits training (the reference's Array init) —
-    used by the deterministic oracle path and by ``extend``.
+    used by the deterministic oracle path; its rows are labelled in one
+    map pass (:func:`_label_rows`), with the literal fold's labels.
+
+    The returned ``lists`` is a lazy plan over ``dataset``: the caller
+    owns it, and persists it (or saves the index) to search it more
+    than once without recomputing it. An index returned by
+    :func:`ivf_flat_extend` instead owns a materialized table.
     """
     d = dataset.select(F.col(id_col).cast("long").alias("id"),
                        F.col(vec_col).alias("vec"))
@@ -79,14 +89,9 @@ def ivf_flat_build(dataset: DataFrame, n_lists: int = 64, *,
     lists = None
     if add_data_on_build:
         if fixed:
-            # oracle-exact expr path (gate queries pin the centroids).
-            # r14: label via the map-only literal-fold argmin — the old
-            # assign + join-back (BroadcastNestedLoopJoin + exchange +
-            # 2 SortAggregates + a second join) is now one Project.
-            cs = coarse_sorted_sql("vec", centroids)
-            lists = d.select(
-                "id", F.expr(f"element_at({cs}, 1).l").alias("list_id"),
-                "vec")
+            # pinned centroids: the oracle's literal-fold labels, from
+            # one map pass
+            lists = _label_rows(d, centroids, "ivf_flat_build")
         else:
             # trained path: one map-only pass emits (id, list_id, vec) —
             # GEMM argmin AND the vector carry, no label re-join shuffle
@@ -255,15 +260,21 @@ def ivf_flat_extend(index: IVFFlatIndex, new_rows: DataFrame, *,
     """``extend(new_vectors, new_indices)`` (ivf_flat.pyx:467): assign
     new rows to their nearest existing center and append.
 
+    The new rows are labelled by :func:`_label_rows` (the same labels as
+    a build on these centres), and the returned index owns its table:
+    :func:`_extended_table` materializes the old table plus the new rows
+    once, in the old table's partition count, so later searches read
+    neither the caller's batch nor the old lineage again. Spark frees
+    that table once no index object references it; the index passed in
+    keeps its own table and stays searchable.
+
     ``adaptive_centers=True`` (ivf_flat.pyx:78-88) drifts each center to
     the mean of its (now larger) list — one posexplode aggregation over
     the updated inverted file, k×dim rows to the driver."""
     d = new_rows.select(F.col(id_col).cast("long").alias("id"),
                         F.col(vec_col).alias("vec"))
-    cs = coarse_sorted_sql("vec", index.centroids)
-    add = d.select("id", F.expr(f"element_at({cs}, 1).l").alias("list_id"),
-                   "vec")
-    lists = index.lists.unionByName(add)
+    add = _label_rows(d, index.centroids, "ivf_flat_extend")
+    lists = _extended_table(index.lists, add)
     centroids = index.centroids
     if adaptive_centers:
         rows = (lists.select("list_id", F.posexplode("vec").alias("dim", "x"))
@@ -275,6 +286,53 @@ def ivf_flat_extend(index: IVFFlatIndex, new_rows: DataFrame, *,
             centroids[r["list_id"], r["dim"]] = r["m"]
     return IVFFlatIndex(centroids=centroids, lists=lists,
                         metric=index.metric)
+
+
+def _label_rows(d: DataFrame, centroids: np.ndarray, op: str) -> DataFrame:
+    """``(id, vec)`` rows → ``(id, list_id, vec)``, each labelled with
+    its nearest of the fixed ``centroids`` in one map pass.
+
+    The labels are those of ``element_at(coarse_sorted_sql(vec,
+    centroids), 1).l``, ties included: :func:`coarse_probes` with one
+    probe is that fold's NumPy twin. A null vector or one whose length
+    is not the centroids' dim raises :func:`vec_matrix`'s error."""
+    import pandas as pd
+
+    from cuvs_spark.cluster.kmeans import coarse_probes
+
+    C = np.asarray(centroids, dtype=np.float64)
+    dim = C.shape[1]
+    bc = d.sparkSession.sparkContext.broadcast(C)
+
+    def label(batches):
+        C = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["id"].to_numpy(np.int64)
+            vecs = pdf["vec"].to_numpy()
+            X = vec_matrix(ids, vecs, dim, op)
+            yield pd.DataFrame({
+                "id": ids,
+                "list_id": coarse_probes(X, C, 1)[:, 0].astype(np.int32),
+                "vec": vecs})
+
+    vec_type = d.schema["vec"].dataType.simpleString()
+    return d.mapInPandas(label, f"id long, list_id int, vec {vec_type}")
+
+
+def _extended_table(table: DataFrame, add: DataFrame) -> DataFrame:
+    """The table of an extended IVF index: ``table`` plus the new rows
+    ``add``, coalesced back to ``table``'s partition count (no shuffle)
+    and materialized once by ``localCheckpoint``, so a search on the
+    extended index costs what one on a fresh build of the same rows
+    costs. The checkpoint cuts the lineage to the caller's batch and
+    the old table; Spark's ContextCleaner frees its blocks once no
+    DataFrame references it. Shared by the IVF-Flat, IVF-PQ and IVF-SQ
+    extends."""
+    n = table.rdd.getNumPartitions()
+    return table.unionByName(add).coalesce(n).localCheckpoint()
+
 
 def ivf_list_sizes(index: IVFFlatIndex) -> DataFrame:
     """Per-list occupancy of the inverted file → ``(list_id,

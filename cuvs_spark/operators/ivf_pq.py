@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from cuvs_spark.cluster.kmeans import (coarse_sorted_sql, gemm_argmin,
                                        kmeans_fit)
 from cuvs_spark.functions.distance import distance_sql_spark
-from cuvs_spark.operators.ivf_flat import vec_matrix
+from cuvs_spark.operators.ivf_flat import _extended_table, vec_matrix
 from cuvs_spark.operators.select_k import select_k
 from cuvs_spark.preprocessing.pq import (PQCodebook, _encode_expr,
                                          _res_expr, _subvecs, _train_books,
@@ -327,11 +327,14 @@ def ivf_pq_extend(index: IVFPQIndex, new_rows: DataFrame, *,
     centers, encode with the EXISTING codebook (centers, codebook,
     encode mode and rotation are immutable), append to the codes table.
     An extended index therefore scores identically to one built over
-    the union with the same fixed centers + codebook."""
+    the union with the same fixed centers + codebook. Like
+    ``ivf_flat_extend``, it owns its codes table: materialized once in
+    the old table's partition count (``ivf_flat._extended_table``) and
+    freed by Spark once no index object references it."""
     from dataclasses import replace
     new_codes = ivf_pq_transform(index, new_rows, id_col=id_col,
                                  vec_col=vec_col, method=method)
-    return replace(index, codes=index.codes.unionByName(new_codes))
+    return replace(index, codes=_extended_table(index.codes, new_codes))
 
 
 def ivf_pq_transform(index: IVFPQIndex, dataset: DataFrame, *,
@@ -809,7 +812,8 @@ def ivf_sq_extend(index: IVFSQIndex, new_rows: DataFrame, *,
     assign new rows to the existing centers, int8-encode their
     residuals with the index's fixed [lo, hi] range, append. Centers
     and range are immutable, so the extended index scores identically
-    to one built over the union."""
+    to one built over the union. It owns its codes table, as
+    ``ivf_flat_extend``'s index does (``ivf_flat._extended_table``)."""
     from dataclasses import replace
     d = new_rows.select(F.col(id_col).cast("long").alias("id"),
                         F.col(vec_col).alias("vec"))
@@ -820,7 +824,7 @@ def ivf_sq_extend(index: IVFSQIndex, new_rows: DataFrame, *,
                           F.expr(_sq_enc("vec", "_b.cv",
                                          index.lo, index.hi))
                           .alias("rcodes")))
-    return replace(index, rcodes=index.rcodes.unionByName(new_rcodes))
+    return replace(index, rcodes=_extended_table(index.rcodes, new_rcodes))
 
 
 def ivf_sq_search(index: IVFSQIndex, queries: DataFrame, k: int = 10,

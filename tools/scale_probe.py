@@ -10,9 +10,10 @@ Usage: python tools/scale_probe.py [n_rows] [dim] [n_queries] [sections]
 rabitq, ivf_sq, ivf_pq, lsh, directional, spectral, cagra) — e.g.
 ``... 1000000 64 1000 lsh`` runs only the LSH-vs-exact crossover at 1M
 rows; ``directional`` probes the r12 max-close paths (inner_product
-IVF-SQ + all_neighbors). The scann, rabitq, ivf_sq and ivf_pq sections
-also print ``<key>_jobs_stages``: the Spark jobs and stages each timed
-call ran.
+IVF-SQ + all_neighbors). The ivf section also builds on fixed centres,
+extends that index twice and searches it. The timed calls of the ivf,
+scann, rabitq, ivf_sq and ivf_pq sections also print
+``<key>_jobs_stages``: the Spark jobs and stages each call ran.
 """
 
 from __future__ import annotations
@@ -41,7 +42,9 @@ def main() -> None:
 
     from cuvs_spark import get_spark
     from cuvs_spark.operators import knn
-    from cuvs_spark.operators.ivf_flat import ivf_flat_build, ivf_flat_search
+    from cuvs_spark.operators.ivf_flat import (ivf_flat_build,
+                                               ivf_flat_extend,
+                                               ivf_flat_search)
 
     spark = get_spark("scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -100,6 +103,22 @@ def main() -> None:
         out["knn_blas_sec"] = round(time.time() - t0, 2)
         out["knn_blas_pairs_per_sec"] = round(n * nq / out["knn_blas_sec"] / 1e6, 1)
 
+    if want("ivf") or want("scann") or want("rabitq") or want("ivf_sq") \
+            or want("ivf_pq"):
+        # shared fixed centroids for the coarse-quantized families
+        cents = np.array(
+            [r["vec"] for r in d.filter(F.col("id") < 128).collect()],
+            dtype=float)
+
+    def built(index, table):
+        # materialize the index table inside the timed build call
+        getattr(index, table).cache().count()
+        return index
+
+    def counted(index):
+        index.lists.count()
+        return index
+
     t0 = time.time()
     if want("ivf"):
         idx = ivf_flat_build(d, n_lists=128, kmeans_n_iters=4,
@@ -117,6 +136,19 @@ def main() -> None:
         out["ivf_search_warm_sec"] = round(time.time() - t0, 2)
         scanned = 8 / 128
         out["ivf_vs_blas_speedup_expected"] = round(1 / scanned, 1)
+        idx.lists.unpersist()
+        # fixed-centroid build on all but two batches of rows, two
+        # extends with those batches, then searches on the extended index
+        m = n // 20
+        fidx = timed("ivf_build_fixed", lambda: built(ivf_flat_build(
+            d.filter(F.col("id") >= 2 * m), 128, centroids=cents), "lists"))
+        for r in (0, 1):
+            batch = d.filter((F.col("id") >= r * m) & (F.col("id") < (r + 1) * m))
+            fidx = timed(f"ivf_extend_{r + 1}", lambda: counted(
+                ivf_flat_extend(fidx, batch)))
+        for key in ("ivf_extended_search", "ivf_extended_search_warm"):
+            timed(key, lambda: noop(ivf_flat_search(
+                fidx, q, 10, n_probes=8, qvec_col="qv", method="blas")))
 
     if want("vamana"):
         # Vamana: candidates via partitioned kNN (blas) + local-GEMM prune
@@ -130,17 +162,6 @@ def main() -> None:
                          method="local")
         g.write.format("noop").mode("overwrite").save()
         out["vamana_build_sec"] = round(time.time() - t0, 2)
-
-    if want("scann") or want("rabitq") or want("ivf_sq") or want("ivf_pq"):
-        # shared fixed centroids for the coarse-quantized families
-        cents = np.array(
-            [r["vec"] for r in d.filter(F.col("id") < 128).collect()],
-            dtype=float)
-
-    def built(index, table):
-        # materialize the index table inside the timed build call
-        getattr(index, table).cache().count()
-        return index
 
     if want("scann"):
         # ScaNN: SOAR build (spilled assignment) + reorder search
