@@ -155,8 +155,7 @@ def build_benches(spark, sf_dir):
         d = emb_dataset(spark, sf_dir)
         if "rabitq" not in _built:
             idx = ivf_rabitq_build(d, 32, bits_per_dim=3,
-                                   centroids=_centroids32(d),
-                                   assign_method="blas")
+                                   centroids=_centroids32(d))
             idx.codes.cache().count()
             _built["rabitq"] = idx
         q = d.select(F.col("id").alias("qid"), F.col("vec").alias("qv"))

@@ -6,25 +6,33 @@ Reference: ``python/cuvs/cuvs/cluster/kmeans/kmeans.pyx:221`` (fit:
 ``kmeans.pyx:449`` (cluster_cost); balanced variant
 ``cpp/src/cluster/kmeans_balanced.cuh`` (used by every IVF build).
 
-Spark design (100 TB shape):
+Spark design (100 TB shape): centroids are a driver-side ndarray
+(O(k·dim), tiny) at every step, so nothing joins against a centroid
+table.
 
-* **assign** — centroids live in a *broadcast* DataFrame; assignment is
-  a broadcast join + ``min(struct(dist, label))`` aggregation. The
-  partial aggregation collapses the n×k join output back to one row per
-  point *before* the exchange, so the shuffle carries n rows, not n×k.
-  All distance math is JVM expression code — no Python in the loop.
-* **update** — per-label mean per dimension via ``posexplode`` +
-  ``groupBy(label, dim)`` partial sums; k×dim result rows collect to the
-  driver (tiny), which closes the loop — exactly MLlib's
-  treeAggregate-to-driver shape.
+* **assign** — ``method="blas"`` (sqeuclidean): one map pass, the
+  centroid matrix broadcast once, one GEMM argmin per Arrow batch.
+  ``method="expr"`` (any metric, oracle-exact): a map-only projection
+  over the centroid literal, ``element_at(coarse_sorted_sql(vec, C),
+  1)`` — the best-first sorted ``(d, l)`` struct array, ties to the
+  lowest label. Neither shuffles.
+* **update** — ``blas``: the same pass accumulates per-label (sum,
+  count) partials per partition, so n_partitions × k rows reach the
+  driver; ``expr``: the literal-fold label, then per-label mean per
+  dimension via ``posexplode`` + ``groupBy(label, dim)`` partial sums;
+  k×dim result rows collect to the driver (tiny), which closes the
+  loop — MLlib's treeAggregate-to-driver shape.
 * **init** — deterministic seeded sample ordered by ``xxhash64(id)``
   (Random), or k-means|| style oversampling (``init="parallel"``), or
   caller-supplied centroids (the reference's ``Array`` init) — the
   latter is what makes single steps SQL-oracle-able.
+* **probes** — :func:`coarse_probes` is the NumPy twin of the literal
+  fold (same rows and ties); the IVF searches pick their probes with
+  it, and the fixed-centroid IVF builds label with it
+  (``ivf_flat._label_rows``).
 
-The hot loop materializes no m×k relation and runs one n-row shuffle
-per iteration; centroid state is O(k·dim) on the driver regardless of
-data scale.
+The hot loop materializes no m×k relation; centroid state is O(k·dim)
+on the driver regardless of data scale.
 """
 
 from __future__ import annotations
@@ -32,7 +40,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cuvs_spark.functions.distance import distance_sql_spark
@@ -48,15 +56,6 @@ class KMeansModel:
         rows = [(int(i), [float(x) for x in c])
                 for i, c in enumerate(self.centroids)]
         return spark.createDataFrame(rows, "label int, centroid array<float>")
-
-
-def _centroid_df(spark, centroids) -> DataFrame:
-    if isinstance(centroids, DataFrame):
-        return centroids
-    if isinstance(centroids, KMeansModel):
-        centroids = centroids.centroids
-    rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    return spark.createDataFrame(rows, "label int, centroid array<float>")
 
 
 def centroid_literal_sql(centroids) -> str:
@@ -145,16 +144,16 @@ def assign(df: DataFrame, centroids, *, id_col: str = "id",
            vec_col: str = "vec", metric: str = "sqeuclidean",
            dist_col: str | None = None, method: str = "expr",
            passthrough: bool = False) -> DataFrame:
-    """Nearest-centroid assignment: ``(id, label[, distance])``.
+    """Nearest-centroid assignment: ``(id, label[, distance])`` for
+    ``centroids`` given as an ndarray or a :class:`KMeansModel`.
 
     ``passthrough=True`` keeps the vector in the output as ``_v``
     (r14, guide §2.4): consumers that need both the label and the
     vector — the balanced-rebalance scorer — avoid a full shuffle
-    join back on id. Supported on the driver-side-centroid paths
-    (blas kernel and literal fold), which is every caller that wants
-    it; labels and distances are bit-identical to the plain call.
+    join back on id; labels and distances are bit-identical to the
+    plain call.
 
-    ``method="expr"``: broadcast join + min-struct partial aggregation
+    ``method="expr"``: a map-only projection over the centroid literal
     (see module doc); ties break to the lowest label, matching the
     oracle's ``ORDER BY dist, label LIMIT 1``. Oracle-exact.
 
@@ -163,13 +162,12 @@ def assign(df: DataFrame, centroids, *, id_col: str = "id",
     argmin. No join, no shuffle, ~20× the throughput; argmin's
     first-minimum rule gives the same lowest-label tie-break. The
     trained (non-oracle) paths default to this."""
-    spark = df.sparkSession
     if method == "blas" and metric == "sqeuclidean":
         import pandas as pd
         if isinstance(centroids, KMeansModel):
             centroids = centroids.centroids
         C = np.asarray(centroids, dtype=np.float64)
-        bc = spark.sparkContext.broadcast(C)
+        bc = df.sparkSession.sparkContext.broadcast(C)
 
         def argmin(batches):
             C = bc.value
@@ -195,29 +193,17 @@ def assign(df: DataFrame, centroids, *, id_col: str = "id",
         if passthrough:
             schema += ", _v " + d.schema["_v"].dataType.simpleString()
         return d.mapInPandas(argmin, schema=schema)
+    # map-only literal-fold argmin: element_at(…, 1) of the best-first
+    # sorted struct array is min(struct(d, l))
     d = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
-    if not isinstance(centroids, DataFrame):
-        # driver-side centroids: map-only literal-fold argmin — no join,
-        # no exchange, no aggregate (r14, guide §2.4). element_at(…, 1)
-        # of the best-first sorted struct array IS min(struct(d, l)).
-        best = F.expr(
-            f"element_at({coarse_sorted_sql('_v', centroids, metric=metric)}, 1)")
-        keep = (["_v"] if passthrough else [])
-        out = d.withColumn("_b", best).select(
-            "id", F.col("_b.l").alias("label"),
-            F.col("_b.d").alias("distance"), *keep)
-        if dist_col is None:
-            return out.drop("distance")
-        return out.withColumnRenamed("distance", dist_col)
-    c = _centroid_df(spark, centroids)
-    dist = F.expr(distance_sql_spark(metric, "_v", "centroid"))
-    joined = d.join(F.broadcast(c)).select(
-        "id", F.struct(dist.alias("d"), F.col("label").alias("l")).alias("_s"))
-    best = joined.groupBy("id").agg(F.min("_s").alias("_b"))
-    out = best.select("id", F.col("_b.l").alias("label"),
-                      F.col("_b.d").alias("distance"))
+    best = F.expr(
+        f"element_at({coarse_sorted_sql('_v', centroids, metric=metric)}, 1)")
+    keep = (["_v"] if passthrough else [])
+    out = d.withColumn("_b", best).select(
+        "id", F.col("_b.l").alias("label"),
+        F.col("_b.d").alias("distance"), *keep)
     if dist_col is None:
-        return out.select("id", "label")
+        return out.drop("distance")
     return out.withColumnRenamed("distance", dist_col)
 
 
@@ -242,7 +228,7 @@ def _update_means(df: DataFrame, centroids, *, id_col: str, vec_col: str,
                   metric: str, method: str = "expr") -> tuple[np.ndarray, np.ndarray]:
     """One Lloyd update → (new_centroids, counts) on the driver.
 
-    ``method="expr"``: assignment via the broadcast-join expression,
+    ``method="expr"``: the literal-fold label as a map-only projection,
     means via posexplode partial aggregation (n×dim-row shuffle).
     ``method="blas"``: one fused mapInPandas pass — each partition does
     the argmin against the broadcast centroid matrix with a GEMM tile
@@ -284,17 +270,10 @@ def _update_means(df: DataFrame, centroids, *, id_col: str, vec_col: str,
             acc[r["label"]] += np.array(r["s"])
             cnt[r["label"]] += r["n"]
     else:
-        if not isinstance(centroids, DataFrame):
-            # label as a map-only projection (r14): the old
-            # assign + join-back re-derived d and shuffled it twice
-            # for a value that is a pure function of the row
-            labeled = d.select(
-                F.expr(f"element_at({coarse_sorted_sql('_v', centroids, metric=metric)}, 1).l")
-                .alias("label"), "_v")
-        else:
-            lab = assign(d, centroids, id_col="id", vec_col="_v",
-                         metric=metric)
-            labeled = d.join(lab, "id").select("label", "_v")
+        # label as a map-only projection of the row
+        labeled = d.select(
+            F.expr(f"element_at({coarse_sorted_sql('_v', centroids, metric=metric)}, 1).l")
+            .alias("label"), "_v")
         sums = (labeled
                 .select("label", F.posexplode("_v").alias("dim", "x"))
                 .groupBy("label", "dim")

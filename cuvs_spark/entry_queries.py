@@ -2845,8 +2845,7 @@ def _rabitq_blas(spark, sf_dir):
     d = emb_dataset(spark, sf_dir)
     idx = ivf_rabitq_build(d, _IVF_LISTS, bits_per_dim=3,
                            centroids=_fixed_centroids(spark, sf_dir,
-                                                      _IVF_LISTS),
-                           assign_method="blas")
+                                                      _IVF_LISTS))
     q = emb_queries(spark, sf_dir, 20)
     return ivf_rabitq_search(idx, q, 10, _IVF_PROBES, qvec_col="qv",
                              score_method="blas") \

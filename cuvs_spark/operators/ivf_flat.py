@@ -23,12 +23,16 @@ Spark design (SURVEY.md §2.5): the index IS a partitioning.
   shuffle is the ``n_parts × q × k`` merge. That scan,
   :func:`_probe_scan`, is the one ``blas`` kernel of every IVF variant
   (IVF-PQ, IVF-SQ, RaBitQ, ScaNN reorder); each brings only its
-  per-list ``score``.
+  per-list ``score``. Among rows tied at the k-th score, every local
+  top-k keeps the lowest ids (:func:`_local_topk`), as the merge does.
   ``method="expr"`` (oracle-exact) runs the coarse stage as a map-only
   SQL fold and broadcast-joins the probe set against the inverted
   file, so the dataset side never shuffles there either. At 1000
   executors the scan reads ``n_probes / n_lists`` of the data — same
   asymptotic win as the GPU.
+* **labelling** — a build or extend on fixed centres labels its rows in
+  one map pass (:func:`_label_rows`, the literal fold's labels); the
+  IVF-SQ, IVF-BQ, RaBitQ and IVF-PQ ``expr`` encodes share it.
 * **extend** — assign each new row to its nearest existing center and
   append it (``ivf_flat.pyx:467``). Like the reference's, the extended
   index owns its storage: the old table plus the new rows, materialized
@@ -45,7 +49,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cuvs_spark.cluster.kmeans import assign, coarse_sorted_sql, kmeans_fit
+from cuvs_spark.cluster.kmeans import (assign, centroid_literal_sql,
+                                       coarse_sorted_sql, kmeans_fit)
 from cuvs_spark.functions.distance import distance_sql_spark, is_min_close
 from cuvs_spark.operators.select_k import select_k
 
@@ -204,7 +209,8 @@ def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
     of the table then scores its own probed lists in place —
     ``score(consts, list_id, P, Q)`` returns the ``(len(Q), len(P))``
     distance tile for the list's stacked payload rows ``P`` — and
-    emits each list's local top-k. Unprobed lists are filtered out
+    emits each list's local top-k (:func:`_local_topk`: ties at the
+    k-th score go to the lowest ids). Unprobed lists are filtered out
     before the scan (file-level pruning on a ``partitionBy(list_id)``
     table); the table never shuffles. The caller merges with
     ``knn_merge_parts`` (whose partial ``WindowGroupLimit`` keeps k
@@ -238,12 +244,11 @@ def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
                     continue
                 bq, BQ = hit
                 D = score(consts, int(lid), P[pos], BQ)
-                kk = min(k, D.shape[1])
-                part = np.argpartition(D if minimize else -D, kk - 1,
-                                       axis=1)[:, :kk]
+                ids = ids_all[pos]
+                part = _local_topk(D if minimize else -D, ids, k)
                 outs.append(pd.DataFrame({
-                    "qid": np.repeat(bq, kk),
-                    "nid": ids_all[pos][part].ravel(),
+                    "qid": np.repeat(bq, part.shape[1]),
+                    "nid": ids[part].ravel(),
                     "distance": np.take_along_axis(D, part, axis=1).ravel()}))
             if outs:
                 yield pd.concat(outs)
@@ -252,6 +257,29 @@ def _probe_scan(table: DataFrame, payload: str, centroids: np.ndarray,
         table = table.filter(F.col("list_id").isin(list(by_list)))
     return table.select("list_id", "id", payload).mapInPandas(
         scan, "qid long, nid long, distance double")
+
+
+def _local_topk(S: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Column positions of each row's ``min(k, S.shape[1])`` smallest
+    scores in the tile ``S`` (one row per query, one column per
+    candidate ``ids``), unordered. ``np.argpartition`` picks among the
+    candidates tied at the k-th score arbitrarily; where it kept fewer
+    of them than tie, the slots go to the lowest ids, the ones
+    ``knn_merge_parts`` and the ``expr`` path keep, so the result does
+    not depend on how the table is partitioned. O(S.size), plus a sort
+    of the tied candidates of such rows."""
+    kk = min(k, S.shape[1])
+    part = np.argpartition(S, kk - 1, axis=1)[:, :kk]
+    kth = np.take_along_axis(S, part[:, kk - 1:], axis=1)
+    # every score below the k-th is kept, so a row with more than kk
+    # scores at or below it has tied candidates left out
+    for r in np.flatnonzero(np.count_nonzero(S <= kth, axis=1) > kk):
+        s, t, p = S[r], kth[r, 0], part[r]
+        better = p[s[p] < t]
+        ties = np.flatnonzero(s == t)
+        ties = ties[np.argsort(ids[ties], kind="stable")]
+        part[r] = np.concatenate([better, ties[:kk - len(better)]])
+    return part
 
 
 def ivf_flat_extend(index: IVFFlatIndex, new_rows: DataFrame, *,
@@ -290,12 +318,16 @@ def ivf_flat_extend(index: IVFFlatIndex, new_rows: DataFrame, *,
 
 def _label_rows(d: DataFrame, centroids: np.ndarray, op: str) -> DataFrame:
     """``(id, vec)`` rows → ``(id, list_id, vec)``, each labelled with
-    its nearest of the fixed ``centroids`` in one map pass.
+    its nearest of the fixed ``centroids`` in one map pass — the one
+    labelling kernel of every fixed-centroid IVF build and extend
+    (IVF-Flat, IVF-SQ, IVF-BQ, RaBitQ and the IVF-PQ ``expr`` encode).
 
     The labels are those of ``element_at(coarse_sorted_sql(vec,
     centroids), 1).l``, ties included: :func:`coarse_probes` with one
     probe is that fold's NumPy twin. A null vector or one whose length
-    is not the centroids' dim raises :func:`vec_matrix`'s error."""
+    is not the centroids' dim raises :func:`vec_matrix`'s error.
+    Encodes that need the list centre read it with
+    :func:`_list_centre`."""
     import pandas as pd
 
     from cuvs_spark.cluster.kmeans import coarse_probes
@@ -321,6 +353,15 @@ def _label_rows(d: DataFrame, centroids: np.ndarray, op: str) -> DataFrame:
     return d.mapInPandas(label, f"id long, list_id int, vec {vec_type}")
 
 
+def _list_centre(centroids: np.ndarray) -> Column:
+    """A labelled row's list centre, ``element_at(<centroid literal>,
+    list_id + 1).cv``: the float32 ``array<float>`` the SQL fold
+    carries as ``cv``, from the same literal
+    (:func:`~cuvs_spark.cluster.kmeans.centroid_literal_sql`)."""
+    lit = centroid_literal_sql(centroids)
+    return F.expr(f"element_at({lit}, list_id + 1).cv")
+
+
 def _extended_table(table: DataFrame, add: DataFrame) -> DataFrame:
     """The table of an extended IVF index: ``table`` plus the new rows
     ``add``, coalesced back to ``table``'s partition count (no shuffle)
@@ -328,9 +369,9 @@ def _extended_table(table: DataFrame, add: DataFrame) -> DataFrame:
     extended index costs what one on a fresh build of the same rows
     costs. The checkpoint cuts the lineage to the caller's batch and
     the old table; Spark's ContextCleaner frees its blocks once no
-    DataFrame references it. Shared by the IVF-Flat, IVF-PQ and IVF-SQ
-    extends."""
-    n = table.rdd.getNumPartitions()
+    DataFrame references it. Shared by the IVF-Flat, IVF-PQ, IVF-SQ and
+    RaBitQ extends."""
+    n = max(table.rdd.getNumPartitions(), 1)   # an empty base may have 0
     return table.unionByName(add).coalesce(n).localCheckpoint()
 
 

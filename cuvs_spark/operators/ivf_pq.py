@@ -62,7 +62,8 @@ from pyspark.sql import functions as F
 from cuvs_spark.cluster.kmeans import (coarse_sorted_sql, gemm_argmin,
                                        kmeans_fit)
 from cuvs_spark.functions.distance import distance_sql_spark
-from cuvs_spark.operators.ivf_flat import _extended_table, vec_matrix
+from cuvs_spark.operators.ivf_flat import (_extended_table, _label_rows,
+                                           _list_centre, vec_matrix)
 from cuvs_spark.operators.select_k import select_k
 from cuvs_spark.preprocessing.pq import (PQCodebook, _encode_expr,
                                          _res_expr, _subvecs, _train_books,
@@ -234,7 +235,7 @@ def ivf_pq_build(dataset: DataFrame, n_lists: int = 32, pq_dim: int = 8,
                              "encode='residual', method='blas'")
         rotation = _rand_rotation(centroids.shape[1], seed)
     if method != "blas":
-        enc_in = _pq_enc_input(d, centroids, encode)
+        enc_in = _pq_enc_input(d, centroids, encode, "ivf_pq_build")
         if codebook is None:
             codebook = pq_build(enc_in, pq_dim, pq_bits,
                                 kmeans_n_iters=kmeans_n_iters, seed=seed)
@@ -296,19 +297,17 @@ def _pq_encode_blas(d: DataFrame, centroids: np.ndarray, CB: np.ndarray,
                          "id long, list_id int, codes array<int>")
 
 
-def _pq_enc_input(d: DataFrame, centroids: np.ndarray,
-                  encode: str) -> DataFrame:
-    """``(id, list_id, vec)`` rows for the expr encode: label and list
-    center from one map-only literal fold (r14), then for
-    ``encode='residual'`` the shift by the center."""
-    best = F.expr(f"element_at({coarse_sorted_sql('vec', centroids)}, 1)")
-    d_lab = d.withColumn("_b", best).select(
-        "id", F.col("_b.l").cast("long").alias("list_id"),
-        F.col("_b.cv").alias("_cent"), "vec")
+def _pq_enc_input(d: DataFrame, centroids: np.ndarray, encode: str,
+                  op: str) -> DataFrame:
+    """``(id, list_id, vec)`` rows for the expr encode: labels from the
+    one labelling pass (``ivf_flat._label_rows``), then for
+    ``encode='residual'`` the shift by the list's float32 centre."""
+    lab = _label_rows(d, centroids, op)
     if encode == "residual":
-        return d_lab.select("id", "list_id",
-                            F.expr(_res_expr("vec", "_cent")).alias("vec"))
-    return d_lab.select("id", "list_id", "vec")
+        lab = (lab.withColumn("_cent", _list_centre(centroids))
+               .withColumn("vec", F.expr(_res_expr("vec", "_cent"))))
+    return lab.select("id", F.col("list_id").cast("long").alias("list_id"),
+                      "vec")
 
 
 def _pq_encode(enc_in: DataFrame, cb_df: DataFrame,
@@ -354,7 +353,8 @@ def ivf_pq_transform(index: IVFPQIndex, dataset: DataFrame, *,
         return _pq_encode_blas(d, index.centroids, index.codebook_array,
                                index.encode, index.rotation,
                                "ivf_pq_transform")
-    enc_in = _pq_enc_input(d, index.centroids, index.encode)
+    enc_in = _pq_enc_input(d, index.centroids, index.encode,
+                           "ivf_pq_transform")
     return _pq_encode(enc_in, index.codebook_df, index.pq_dim)
 
 
@@ -797,13 +797,21 @@ def ivf_sq_build(dataset: DataFrame, n_lists: int = 32, *,
         model = kmeans_fit(d.sample(fraction=0.5, seed=seed), n_lists,
                            max_iter=kmeans_n_iters, seed=seed, balanced=True)
         centroids = model.centroids
-    best = F.expr(f"element_at({coarse_sorted_sql('vec', centroids)}, 1)")
-    rcodes = (d.withColumn("_b", best)
-              .select("id", F.col("_b.l").cast("int").alias("list_id"),
-                      F.expr(_sq_enc("vec", "_b.cv", lo, hi))
-                      .alias("rcodes")))
+    rcodes = _sq_encode(d, centroids, lo, hi, "ivf_sq_build")
     return IVFSQIndex(centroids=np.asarray(centroids, float), rcodes=rcodes,
                       lo=lo, hi=hi, metric=metric)
+
+
+def _sq_encode(d: DataFrame, centroids: np.ndarray, lo: float, hi: float,
+               op: str) -> DataFrame:
+    """``(id, vec)`` → ``(id, list_id int, rcodes array<int>)``: the
+    labelling pass (``ivf_flat._label_rows``) and the int8 residual
+    encode against the list's float32 centre in one projection — the
+    encode of both :func:`ivf_sq_build` and :func:`ivf_sq_extend`."""
+    return (_label_rows(d, centroids, op)
+            .withColumn("_cent", _list_centre(centroids))
+            .select("id", "list_id",
+                    F.expr(_sq_enc("vec", "_cent", lo, hi)).alias("rcodes")))
 
 
 def ivf_sq_extend(index: IVFSQIndex, new_rows: DataFrame, *,
@@ -817,13 +825,8 @@ def ivf_sq_extend(index: IVFSQIndex, new_rows: DataFrame, *,
     from dataclasses import replace
     d = new_rows.select(F.col(id_col).cast("long").alias("id"),
                         F.col(vec_col).alias("vec"))
-    best = F.expr(
-        f"element_at({coarse_sorted_sql('vec', index.centroids)}, 1)")
-    new_rcodes = (d.withColumn("_b", best)
-                  .select("id", F.col("_b.l").cast("int").alias("list_id"),
-                          F.expr(_sq_enc("vec", "_b.cv",
-                                         index.lo, index.hi))
-                          .alias("rcodes")))
+    new_rcodes = _sq_encode(d, index.centroids, index.lo, index.hi,
+                            "ivf_sq_extend")
     return replace(index, rcodes=_extended_table(index.rcodes, new_rcodes))
 
 
@@ -966,12 +969,10 @@ def ivf_bq_build(dataset: DataFrame, n_lists: int = 32, *,
         model = kmeans_fit(d.sample(fraction=0.5, seed=seed), n_lists,
                            max_iter=kmeans_n_iters, seed=seed, balanced=True)
         centroids = model.centroids
-    # r14: label via the map-only literal fold — binary_quantize is a
-    # plain withColumn, so build is one projection (no assign aggregate,
-    # no join-back)
-    lab_sql = f"element_at({coarse_sorted_sql('vec', centroids)}, 1).l"
-    bits = (binary_quantize(d, threshold=threshold)
-            .select("id", F.expr(lab_sql).alias("list_id"), "bits"))
+    # one labelling pass; binary_quantize is a plain projection over it
+    bits = (binary_quantize(_label_rows(d, centroids, "ivf_bq_build"),
+                            threshold=threshold)
+            .select("id", "list_id", "bits"))
     return IVFBQIndex(centroids=np.asarray(centroids, float), bits=bits)
 
 

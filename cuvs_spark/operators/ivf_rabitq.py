@@ -44,11 +44,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cuvs_spark.cluster.kmeans import assign, coarse_sorted_sql, kmeans_fit
+from cuvs_spark.cluster.kmeans import coarse_sorted_sql, kmeans_fit
 from cuvs_spark.functions.distance import (
     distance_sql_duckdb,
     distance_sql_spark,
 )
+from cuvs_spark.operators.ivf_flat import (_extended_table, _label_rows,
+                                           _list_centre, _probe_scan,
+                                           _query_matrix)
 from cuvs_spark.operators.select_k import select_k
 
 __all__ = [
@@ -145,14 +148,12 @@ def ivf_rabitq_build(dataset: DataFrame, n_lists: int = 32, *,
                      bits_per_dim: int = 3, kmeans_n_iters: int = 10,
                      seed: int = 42, id_col: str = "id",
                      vec_col: str = "vec",
-                     centroids: np.ndarray | None = None,
-                     assign_method: str = "expr") -> IVFRabitQIndex:
+                     centroids: np.ndarray | None = None) -> IVFRabitQIndex:
     """Assign to lists, quantize residual directions to ``bits_per_dim``
     odd-grid codes, precompute the per-row estimator scalars
     (``|r|^2``, ``|v|^2``, ``<v, r>``)."""
     if not 1 <= bits_per_dim <= 9:
         raise ValueError("bits_per_dim must be in [1, 9]")  # hpp:48
-    spark = dataset.sparkSession
     d = dataset.select(F.col(id_col).cast("long").alias("id"),
                        F.col(vec_col).alias("vec"))
     if centroids is None:
@@ -160,81 +161,49 @@ def ivf_rabitq_build(dataset: DataFrame, n_lists: int = 32, *,
                            max_iter=kmeans_n_iters, seed=seed, balanced=True)
         centroids = model.centroids
     centroids = np.asarray(centroids, float)
-    if assign_method == "expr":
-        # r14: map-only literal fold — label and list center in one
-        # projection, no assign aggregate / join-back / centroid join
-        best = F.expr(f"element_at({coarse_sorted_sql('vec', centroids)}, 1)")
-        s1 = (d.withColumn("_b", best)
-              .select("id", F.col("_b.l").cast("long").alias("list_id"),
-                      F.expr(_res("spark", "vec", "_b.cv")).alias("res"),
-                      F.expr(distance_sql_spark("sqeuclidean", "vec",
-                                                "_b.cv")).alias("n2")))
-    else:
-        cent = spark.createDataFrame(
-            [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-            "list_id long, cv array<float>")
-        lab = assign(d, centroids, metric="sqeuclidean",
-                     method=assign_method) \
-            .select("id", F.col("label").cast("long").alias("list_id"))
-        s1 = (d.join(lab, "id").join(F.broadcast(cent), "list_id")
-              .select("id", "list_id",
-                      F.expr(_res("spark", "vec", "cv")).alias("res"),
-                      F.expr(distance_sql_spark("sqeuclidean", "vec", "cv"))
-                      .alias("n2")))
-    s2 = s1.withColumn(
-        "codes", F.expr(_codes("spark", "res", "n2", bits_per_dim)))
-    s3 = s2.withColumn(
-        "v", F.expr(_decode("spark", "codes", bits_per_dim)))
-    codes = s3.select(
+    return IVFRabitQIndex(
+        centroids=centroids, bits_per_dim=bits_per_dim,
+        codes=_rabitq_encode(d, centroids, bits_per_dim, "ivf_rabitq_build"))
+
+
+def _rabitq_encode(d: DataFrame, centroids: np.ndarray, B: int,
+                   op: str) -> DataFrame:
+    """``(id, vec)`` → ``(id, list_id long, codes, n2, vn2, ipr)``: the
+    labelling pass (``ivf_flat._label_rows``), then the residual
+    against the list's float32 centre, its odd-grid codes and the
+    estimator scalars as closed-form projections — the encode of both
+    :func:`ivf_rabitq_build` and :func:`ivf_rabitq_extend`."""
+    s1 = (_label_rows(d, centroids, op)
+          .withColumn("_cent", _list_centre(centroids))
+          .select("id", F.col("list_id").cast("long").alias("list_id"),
+                  F.expr(_res("spark", "vec", "_cent")).alias("res"),
+                  F.expr(distance_sql_spark("sqeuclidean", "vec", "_cent"))
+                  .alias("n2")))
+    s3 = (s1.withColumn("codes", F.expr(_codes("spark", "res", "n2", B)))
+          .withColumn("v", F.expr(_decode("spark", "codes", B))))
+    return s3.select(
         "id", "list_id", "codes", "n2",
         F.expr(_fold("spark", "v", "v", _DOT)).alias("vn2"),
         F.expr(_fold("spark", "v", "res", _DOT)).alias("ipr"))
-    return IVFRabitQIndex(centroids=centroids, codes=codes,
-                          bits_per_dim=bits_per_dim)
 
 
 def ivf_rabitq_extend(index: IVFRabitQIndex, new_rows: DataFrame, *,
-                      id_col: str = "id", vec_col: str = "vec",
-                      assign_method: str = "expr") -> IVFRabitQIndex:
+                      id_col: str = "id",
+                      vec_col: str = "vec") -> IVFRabitQIndex:
     """``extend`` parity (IVF family, ``ivf_flat.pyx:467`` shape):
     assign new rows to the existing centers, encode their residuals
     with the same closed-form expressions, append to the codes table.
     Centers and bit width are immutable, so an extended index scores
-    identically to one built over the union."""
+    identically to one built over the union. Like ``ivf_flat_extend``'s
+    index, it owns its codes table: materialized once in the old
+    table's partition count (``ivf_flat._extended_table``) and freed by
+    Spark once no index object references it."""
     from dataclasses import replace
-    spark = new_rows.sparkSession
-    B = index.bits_per_dim
     d = new_rows.select(F.col(id_col).cast("long").alias("id"),
                         F.col(vec_col).alias("vec"))
-    if assign_method == "expr":
-        best = F.expr(
-            f"element_at({coarse_sorted_sql('vec', index.centroids)}, 1)")
-        s1 = (d.withColumn("_b", best)
-              .select("id", F.col("_b.l").cast("long").alias("list_id"),
-                      F.expr(_res("spark", "vec", "_b.cv")).alias("res"),
-                      F.expr(distance_sql_spark("sqeuclidean", "vec",
-                                                "_b.cv")).alias("n2")))
-    else:
-        cent = spark.createDataFrame(
-            [(int(i), [float(x) for x in c])
-             for i, c in enumerate(index.centroids)],
-            "list_id long, cv array<float>")
-        lab = assign(d, index.centroids, metric="sqeuclidean",
-                     method=assign_method) \
-            .select("id", F.col("label").cast("long").alias("list_id"))
-        s1 = (d.join(lab, "id").join(F.broadcast(cent), "list_id")
-              .select("id", "list_id",
-                      F.expr(_res("spark", "vec", "cv")).alias("res"),
-                      F.expr(distance_sql_spark("sqeuclidean", "vec", "cv"))
-                      .alias("n2")))
-    s3 = (s1.withColumn("codes",
-                        F.expr(_codes("spark", "res", "n2", B)))
-          .withColumn("v", F.expr(_decode("spark", "codes", B))))
-    new_codes = s3.select(
-        "id", "list_id", "codes", "n2",
-        F.expr(_fold("spark", "v", "v", _DOT)).alias("vn2"),
-        F.expr(_fold("spark", "v", "res", _DOT)).alias("ipr"))
-    return replace(index, codes=index.codes.unionByName(new_codes))
+    new_codes = _rabitq_encode(d, index.centroids, index.bits_per_dim,
+                               "ivf_rabitq_extend")
+    return replace(index, codes=_extended_table(index.codes, new_codes))
 
 
 def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
@@ -256,7 +225,6 @@ def ivf_rabitq_search(index: IVFRabitQIndex, queries: DataFrame,
         # per-row estimator scalars ride as one payload array, each
         # probed list decodes once and scores its probing queries with
         # ONE GEMM (ipq = QR @ V.T) and a local top-k
-        from cuvs_spark.operators.ivf_flat import _probe_scan, _query_matrix
         from cuvs_spark.operators.select_k import knn_merge_parts
         C32 = np.asarray(index.centroids, np.float32).astype(np.float64)
         dim = C32.shape[1]

@@ -168,8 +168,8 @@ def kmeans_fit_cent_sql(dataset_sql: str, cent_sql: str, n_iters: int,
     (e.g. :func:`ivf_flat_search_sql` with a TRAINED ``cent_sql``).
 
     The float cast is load-bearing: the Spark operators hand trained
-    centroids downstream through ``array<float>`` DataFrames
-    (``_centroid_df`` / ``ivf_flat_search``'s cent frame), so the
+    centroids downstream narrowed to float32 (the ``array<float>``
+    centroid literal, ``kmeans.centroid_literal_sql``), so the
     engines only agree if DuckDB narrows the rounded doubles to float32
     the same way — IEEE round-to-nearest on identical inputs yields
     identical bits, and the distance folds then match exactly as they

@@ -1,13 +1,16 @@
-"""Fixed-centroid IVF-Flat labelling in one map pass, and extended
-indexes that own their table.
+"""Fixed-centroid IVF labelling in one map pass, and extended indexes
+that own their table.
 
-* ``ivf_flat_build(centroids=…)`` labels every row exactly as the SQL
-  literal fold ``element_at(coarse_sorted_sql(vec, C), 1).l`` does:
-  with duplicated centres (ties), a dim that is not a multiple of 8 and
-  more rows in one Arrow batch than the probe kernel's block;
-* a null or wrong-length vector fails the build and the extend with a
+* every fixed-centroid build and extend labels its rows exactly as the
+  SQL literal fold ``element_at(coarse_sorted_sql(vec, C), 1)`` does,
+  and the encodes that read the list centre read the fold's float32
+  ``cv``: the IVF-Flat, IVF-SQ, IVF-BQ, RaBitQ and IVF-PQ ``expr``
+  tables (labels, codes and scalars) equal the fold's, with duplicated
+  centres (ties), a dim that is not a multiple of 8 and more rows in
+  one Arrow batch than the probe kernel's block;
+* a null or wrong-length vector fails those builds and extends with a
   ``ValueError`` naming the row id, its length and the index dim;
-* the IVF-Flat, IVF-PQ and IVF-SQ extends keep the base table's
+* the IVF-Flat, IVF-PQ, IVF-SQ and RaBitQ extends keep the base table's
   partition count over two extends, materialize their table and search
   exactly like the lazy ``unionByName`` extend they replace;
 * a ``blas`` search on an index built and then extended twice runs as
@@ -30,14 +33,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuvs_spark.cluster.kmeans import _PROBE_BLOCK, coarse_sorted_sql
+from cuvs_spark.functions.distance import distance_sql_spark
 from cuvs_spark.operators.ivf_flat import (ivf_flat_build, ivf_flat_extend,
                                            ivf_flat_search)
-from cuvs_spark.operators.ivf_pq import (ivf_pq_build, ivf_pq_extend,
+from cuvs_spark.operators.ivf_pq import (_pq_encode, _sq_enc, ivf_bq_build,
+                                         ivf_pq_build, ivf_pq_extend,
                                          ivf_pq_search, ivf_pq_transform,
                                          ivf_sq_build, ivf_sq_extend,
                                          ivf_sq_search)
+from cuvs_spark.operators.ivf_rabitq import (_DOT, _codes, _decode, _fold,
+                                             _res, ivf_rabitq_build,
+                                             ivf_rabitq_extend,
+                                             ivf_rabitq_search)
 from cuvs_spark.plans.layout import plan_string
-from cuvs_spark.preprocessing.pq import PQCodebook
+from cuvs_spark.preprocessing.pq import PQCodebook, _res_expr
+from cuvs_spark.preprocessing.quantize import binary_quantize
 
 DIM, N_LISTS, K, N_PROBES = 8, 6, 5, 3
 
@@ -51,15 +61,55 @@ def _frame(spark, ids, X, id_col="id"):
         {id_col: np.asarray(ids, np.int64), "vec": list(X)}))
 
 
-def _sql_labels(df, C):
-    cs = coarse_sorted_sql("vec", C)
-    return sorted((r["id"], r["l"]) for r in df.select(
-        "id", F.expr(f"element_at({cs}, 1).l").alias("l")).collect())
+def _table(df):
+    """A table's rows, arrays as tuples, sorted."""
+    return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                  for r in df.collect())
 
 
-def _kernel_labels(df, C):
-    idx = ivf_flat_build(df, len(C), centroids=C)
-    return sorted((r["id"], r["list_id"]) for r in idx.lists.collect())
+def _kernel_and_fold(spark, which, df, C):
+    """``(kernel table, fold table)`` of one fixed-centroid build or
+    extend: the index's table, and the same columns computed from the
+    SQL literal fold's label ``l`` and centre ``cv`` with the module's
+    own encode expressions (the encode the fold fed before)."""
+    n, dim = C.shape
+    f = df.withColumn("_b", F.expr(
+        f"element_at({coarse_sorted_sql('vec', C)}, 1)"))
+    l, cv = F.col("_b.l"), "_b.cv"
+    empty = df.limit(0)
+    if which == "flat":
+        return (ivf_flat_build(df, n, centroids=C).lists
+                .select("id", "list_id"), f.select("id", l))
+    if which in ("sq", "sq_extend"):
+        kw = dict(centroids=C, lo=-2.0, hi=2.0)
+        ix = (ivf_sq_build(df, n, **kw) if which == "sq" else
+              ivf_sq_extend(ivf_sq_build(empty, n, **kw), df))
+        return ix.rcodes, f.select("id", l, F.expr(_sq_enc("vec", cv,
+                                                           -2.0, 2.0)))
+    if which == "bq":
+        return (ivf_bq_build(df, n, centroids=C).bits,
+                binary_quantize(f).select("id", l, "bits"))
+    if which in ("rabitq", "rabitq_extend"):
+        ix = (ivf_rabitq_build(df, n, centroids=C) if which == "rabitq" else
+              ivf_rabitq_extend(ivf_rabitq_build(empty, n, centroids=C), df))
+        s = (f.select("id", l.cast("long").alias("l"),
+                      F.expr(_res("spark", "vec", cv)).alias("res"),
+                      F.expr(distance_sql_spark("sqeuclidean", "vec", cv))
+                      .alias("n2"))
+             .withColumn("codes", F.expr(_codes("spark", "res", "n2", 3)))
+             .withColumn("v", F.expr(_decode("spark", "codes", 3))))
+        return ix.codes, s.select("id", "l", "codes", "n2",
+                                  F.expr(_fold("spark", "v", "v", _DOT)),
+                                  F.expr(_fold("spark", "v", "res", _DOT)))
+    # IVF-PQ expr, residual encode, on a given codebook
+    pq_dim = 1 if dim % 2 else 2
+    book = PQCodebook(np.random.default_rng(5).normal(
+        size=(pq_dim, 16, dim // pq_dim)))
+    ix = ivf_pq_build(df, n, pq_dim, 4, centroids=C, codebook=book,
+                      encode="residual", method="expr")
+    enc_in = f.select("id", l.cast("long").alias("list_id"),
+                      F.expr(_res_expr("vec", cv)).alias("vec"))
+    return ix.codes, _pq_encode(enc_in, ix.codebook_df, pq_dim)
 
 
 @pytest.mark.parametrize("case", ["ties", "dim17", "over_probe_block"])
@@ -83,7 +133,10 @@ def test_kernel_labels_match_sql_fold(spark, case):
         X = rng.normal(size=(n, DIM)).astype(np.float32)
         C = rng.normal(size=(N_LISTS, DIM)) + 1e-3 / 3
         df = _frame(spark, np.arange(n), X).coalesce(1)
-    assert _kernel_labels(df, C) == _sql_labels(df, C)
+    for which in ("flat", "sq", "sq_extend", "bq", "rabitq",
+                  "rabitq_extend", "pq_expr"):
+        kernel, fold = _kernel_and_fold(spark, which, df, C)
+        assert _table(kernel) == _table(fold), which
 
 
 def _bad_frame(spark, kind):
@@ -93,18 +146,46 @@ def _bad_frame(spark, kind):
                                  "id long, vec array<float>")
 
 
+def _build(op, df, C):
+    """A fixed-centroid ``op`` build over ``df``, forced."""
+    if op == "ivf_flat":
+        return ivf_flat_build(df, 2, centroids=C).lists.collect()
+    if op == "ivf_sq":
+        return ivf_sq_build(df, 2, centroids=C).rcodes.collect()
+    if op == "ivf_bq":
+        return ivf_bq_build(df, 2, centroids=C).bits.collect()
+    if op == "ivf_rabitq":
+        return ivf_rabitq_build(df, 2, centroids=C).codes.collect()
+    book = PQCodebook(np.zeros((1, 4, 3)))
+    return ivf_pq_build(df, 2, 1, 2, centroids=C, codebook=book,
+                        encode="residual", method="expr").codes.collect()
+
+
+_EXTENDS = {
+    "ivf_flat": lambda good, C, b: ivf_flat_extend(
+        ivf_flat_build(good, 2, centroids=C), b),
+    "ivf_sq": lambda good, C, b: ivf_sq_extend(
+        ivf_sq_build(good, 2, centroids=C), b),
+    "ivf_rabitq": lambda good, C, b: ivf_rabitq_extend(
+        ivf_rabitq_build(good, 2, centroids=C), b),
+}
+
+
 @pytest.mark.parametrize("kind", ["null", "short"])
 def test_bad_vector_names_the_row(spark, kind):
     C = np.array([[1.0, 1.0, 1.0], [0.0, 0.0, 0.0]])
     what = "a null vector" if kind == "null" else "2 dims"
     msg = f"id 3 has {what} but the index has 3 dims"
     bad = _bad_frame(spark, kind)
-    with pytest.raises(Exception, match=f"ValueError: ivf_flat_build: {msg}"):
-        ivf_flat_build(bad, 2, centroids=C).lists.collect()
-    good = ivf_flat_build(bad.filter(F.col("id") < 3), 2, centroids=C)
-    # the extend materializes its table, so it fails before returning
-    with pytest.raises(Exception, match=f"ValueError: ivf_flat_extend: {msg}"):
-        ivf_flat_extend(good, bad.filter(F.col("id") == 3))
+    for op in ("ivf_flat", "ivf_sq", "ivf_bq", "ivf_rabitq", "ivf_pq"):
+        with pytest.raises(Exception, match=f"ValueError: {op}_build: {msg}"):
+            _build(op, bad, C)
+    for op, extend in _EXTENDS.items():
+        # the extend materializes its table, so it fails before returning
+        with pytest.raises(Exception,
+                           match=f"ValueError: {op}_extend: {msg}"):
+            extend(bad.filter(F.col("id") < 3), C,
+                   bad.filter(F.col("id") == 3))
 
 
 @pytest.fixture(scope="module")
@@ -197,6 +278,24 @@ def test_sq_extend_owns_table_and_searches_like_union(spark, data):
                                    method=method)) == \
             _rows(ivf_sq_search(old, data["queries"], K, N_PROBES,
                                 method=method))
+
+
+def test_rabitq_extend_owns_table_and_searches_like_union(spark, data):
+    base = ivf_rabitq_build(data["base"], N_LISTS, centroids=data["C"])
+    n = base.codes.rdd.getNumPartitions()
+    ext = _twice(ivf_rabitq_extend, base, data["batches"])
+    # the old extend appended the new rows' codes lazily
+    old = _twice(lambda ix, b: replace(ix, codes=ix.codes.unionByName(
+        ivf_rabitq_build(b, N_LISTS, centroids=data["C"]).codes)),
+        base, data["batches"])
+    assert ext.codes.rdd.getNumPartitions() == n
+    assert ext.codes.count() == 600
+    assert "MapInPandas" not in plan_string(ext.codes)
+    for method in ("blas", "expr"):
+        assert _rows(ivf_rabitq_search(ext, data["queries"], K, N_PROBES,
+                                       score_method=method)) == \
+            _rows(ivf_rabitq_search(old, data["queries"], K, N_PROBES,
+                                    score_method=method))
 
 
 def _tasks_run_by(spark, fn):

@@ -13,6 +13,9 @@ query batch and one map pass over the inverted file.
   float32-narrowed centres as the build, and RaBitQ's per-list query
   residuals are bit-identical to the SQL values;
 * a repeat IVF-PQ search runs no codebook job;
+* among rows tied at the k-th distance, every local top-k keeps the
+  lowest ids, so a ``blas`` search returns the ``expr`` rows whatever
+  the table's partitioning;
 * a query of the wrong length fails before any job, naming both dims;
 * ``select_k``'s window strategy tolerates inputs that already carry
   its temp column or the rank column.
@@ -28,7 +31,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuvs_spark.cluster.kmeans import coarse_probes, coarse_sorted_sql
-from cuvs_spark.operators.ivf_flat import ivf_flat_build, ivf_flat_search
+from cuvs_spark.operators.ivf_flat import (_local_topk, ivf_flat_build,
+                                           ivf_flat_search)
 from cuvs_spark.operators.ivf_pq import (ivf_pq_build, ivf_pq_search,
                                          ivf_sq_build, ivf_sq_search)
 from cuvs_spark.operators.ivf_rabitq import (_query_residuals, _res,
@@ -290,3 +294,38 @@ def test_select_k_window_replaces_rank_column(spark):
     assert out.columns == ["key", "v", "rank"]
     assert sorted(map(tuple, out.collect())) == [
         (1, 0.1, 1), (1, 0.2, 2), (2, 0.5, 1)]
+
+
+def test_local_topk_keeps_lowest_ids_among_ties():
+    rng = np.random.default_rng(4)
+    for m, p, k in [(30, 50, 5), (20, 7, 10), (10, 40, 1)]:
+        S = rng.integers(0, 4, (m, p)).astype(np.float64)
+        ids = rng.permutation(1000)[:p]
+        part = _local_topk(S, ids, k)
+        for r in range(m):
+            want = np.lexsort((ids, S[r]))[:min(k, p)]
+            assert sorted(ids[part[r]]) == sorted(ids[want])
+
+
+def test_flat_blas_ties_do_not_depend_on_partitioning(spark):
+    """Integer-valued rows tie at the k-th distance: the ``blas`` search
+    of one table at 1 and at 7 partitions returns the ``expr`` rows."""
+    rng = np.random.default_rng(8)
+    X = rng.integers(0, 2, (400, 4)).astype(np.float32)
+    df = spark.createDataFrame([(int(i), [float(x) for x in v])
+                                for i, v in enumerate(X)],
+                               "id long, vec array<float>")
+    q = spark.createDataFrame([(int(i), [float(x) for x in v]) for i, v in
+                               enumerate(rng.integers(0, 2, (12, 4)))],
+                              "qid long, vec array<float>")
+    idx = ivf_flat_build(df, 4, centroids=X[[0, 1, 2, 3]] + 0.25)
+    idx = replace(idx, lists=idx.lists.localCheckpoint())
+
+    def rows(ix, method):
+        return sorted(map(tuple, ivf_flat_search(ix, q, 5, 2,
+                                                 method=method).collect()))
+
+    want = rows(idx, "expr")
+    for n in (1, 7):
+        parted = replace(idx, lists=idx.lists.repartition(n))
+        assert rows(parted, "blas") == want, n

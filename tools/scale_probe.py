@@ -177,7 +177,7 @@ def main() -> None:
         from cuvs_spark.operators.ivf_rabitq import (ivf_rabitq_build,
                                                      ivf_rabitq_search)
         ridx = timed("rabitq_build", lambda: built(ivf_rabitq_build(
-            d, 128, bits_per_dim=3, centroids=cents, assign_method="blas"),
+            d, 128, bits_per_dim=3, centroids=cents),
             "codes"))
         for key in ("rabitq_search", "rabitq_search_warm"):
             timed(key, lambda: noop(ivf_rabitq_search(
